@@ -294,12 +294,12 @@ def _memoized(cache: dict, key: tuple, build) -> DataFrame:
                 return cached
             except Exception:  # noqa: BLE001 — stale session: rebuild
                 cache.pop(key, None)
-        t0 = _time.time()
+        t0 = _time.perf_counter()
         df = build().localCheckpoint()
         cache[key] = df
         tag = str(key[-1]) if isinstance(key, tuple) and key else str(key)
         INDEX_BUILD_SECONDS[tag] = round(
-            INDEX_BUILD_SECONDS.get(tag, 0.0) + (_time.time() - t0), 3
+            INDEX_BUILD_SECONDS.get(tag, 0.0) + (_time.perf_counter() - t0), 3
         )
         return df
 
@@ -699,31 +699,6 @@ def embedding_near_dup_pairs(
 
 
 # --- registry queries + oracles -------------------------------------
-
-
-def containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    threshold: float = 0.8,
-    sh: DataFrame | None = None,
-    max_df: int | None = MAX_SHINGLE_DF,
-) -> DataFrame:
-    """Asymmetric near-duplicate detection by shingle CONTAINMENT:
-    c = |A∩B| / min(|A|, |B|) — a truncated copy of a long document
-    scores ~1.0 here while its Jaccard can be arbitrarily small, so
-    this is the screen that catches prefix/truncation duplicates.
-    Thin wrapper over :func:`pair_intersection_stats` (one shared
-    inverted-index plan for every set-similarity score); only the
-    score expression differs from :func:`jaccard_pairs`."""
-    if sh is None:
-        sh = shingle_sets(df, id_col, text_col, k).persist()
-    stats = pair_intersection_stats(sh, id_col, max_df=max_df)
-    cont = F.col("i") / F.least("n1", "n2")
-    return stats.select("d1", "d2", cont.alias("containment")).filter(
-        F.col("containment") >= threshold
-    )
 
 
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,6 +15,14 @@ engine-level knobs we own are the session configs below, chosen for the
 * ``ignoreCorruptFiles`` mirrors the reference's skip-unreadable-input
   semantics (``worker.rs:109-115``: bad files are warned and skipped,
   not fatal).
+* ``spark.python.daemon.module`` = ``mapreduce_rust_spark.pydaemon``:
+  every Python worker forks from a daemon whose per-task import-cache
+  reset skips unchanged zip archives. Under stock ``pyspark.daemon``
+  each task re-reads ``pyspark.zip``'s directory once per importer, up
+  to 15 times, on Python < 3.12 (about 40 ms); a no-op ``mapInArrow``
+  over 32 partitions took 1.32 s with it and 0.53 s without (median of
+  8, 4-core x86 host). ``spark.executorEnv.PYTHONPATH`` makes the
+  daemon importable whatever the driver's working directory.
 """
 
 from __future__ import annotations
@@ -27,6 +35,7 @@ import tempfile
 from pyspark.sql import SparkSession
 
 _SCRATCH_ROOT: str | None = None
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def scratch_dir(prefix: str = "mrs_") -> str:
@@ -79,6 +88,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "mapreduce_rust_spark.pydaemon")
+        # the daemon (and any engine function a worker unpickles) must
+        # import from wherever the driver was started
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -75,6 +75,7 @@ def main() -> int:
     from mapreduce_rust_spark.streaming.queries import (
         read_stream_table,
         run_available_now,
+        run_stream,
     )
 
     run_available_now(
@@ -114,14 +115,12 @@ def main() -> int:
     # ... and the foreachBatch sink machinery (driver-side Python
     # callback server + per-batch planning — measured ~3-5 s once per
     # JVM, otherwise charged to streaming_foreachbatch_upsert)
-    run_available_now_fb = (
+    run_stream(
+        spark,
         read_stream_table(spark, sf_dir, "nation")
         .writeStream.foreachBatch(lambda bdf, bid: bdf.count())
-        .trigger(availableNow=True)
-        .option("checkpointLocation", _scratch(prefix="mrs_warm_fb_"))
-        .start()
+        .option("checkpointLocation", _scratch(prefix="mrs_warm_fb_")),
     )
-    run_available_now_fb.awaitTermination()
     # Warm the OS page cache over the input tables: per-query timings
     # should measure the engine, not whether a prior process happened to
     # leave the parquet files resident. (~100 MB at sf0.1, one pass.)

@@ -25,6 +25,8 @@ reference hardcoded as ``n_map``.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,8 +35,23 @@ ORACLE: dict[str, str] = {}
 N_ROWS = 4096
 N_PARTS = 8
 
+_REGISTER_LOCK = threading.Lock()
+
+
+def _register(spark: SparkSession, *sources) -> None:
+    """Register Python data sources, one thread at a time: Spark checks
+    a name's first registration against every source it can resolve
+    and then stores it, so two threads registering one name at once
+    can fail with DATA_SOURCE_ALREADY_EXISTS."""
+    with _REGISTER_LOCK:
+        for source in sources:
+            spark.dataSource.register(source)
+
 
 def _register_source(spark: SparkSession) -> None:
+    """Register ``mrs_range`` and its filter-pushdown twin
+    ``mrs_range_pushdown``; both split the range into the same
+    ``N_PARTS`` shards."""
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
     class _RangePartition(InputPartition):
@@ -42,16 +59,20 @@ def _register_source(spark: SparkSession) -> None:
             self.start, self.end = start, end
 
     class _RangeReader(DataSourceReader):
+        lo = 0  # lowest id read; only pushFilters raises it
+
         def partitions(self):
             step = N_ROWS // N_PARTS
-            return [
-                # last shard absorbs the remainder so every row is
-                # emitted even when the constants stop dividing evenly
+            # last shard absorbs the remainder so every row is emitted
+            # even when the constants stop dividing evenly; shards
+            # entirely below ``lo`` never become tasks
+            shards = [
                 _RangePartition(
                     i * step, (i + 1) * step if i < N_PARTS - 1 else N_ROWS
                 )
                 for i in range(N_PARTS)
             ]
+            return [s for s in shards if s.end > self.lo]
 
         def read(self, partition):
             # One Arrow RecordBatch per partition instead of per-row
@@ -61,7 +82,7 @@ def _register_source(spark: SparkSession) -> None:
             # math — engine-independent, seed-free.
             import pyarrow as pa
 
-            ids = list(range(partition.start, partition.end))
+            ids = list(range(max(partition.start, self.lo), partition.end))
             yield pa.record_batch(
                 [
                     pa.array(ids, pa.int64()),
@@ -70,6 +91,40 @@ def _register_source(spark: SparkSession) -> None:
                 ],
                 names=["id", "bucket", "val"],
             )
+
+    class _PushdownReader(_RangeReader):
+        """Filter-pushdown-capable reader (Spark 4.1 ``pushFilters``):
+        absorbs ``id >= v`` / ``id > v`` (and the planner's implicit
+        IsNotNull), PRUNES whole partitions below the bound at
+        planning time, and slices the survivor shard — the Python-
+        connector analogue of parquet row-group skipping. Absorbed
+        filters are the source's obligation (Spark does NOT re-apply
+        them), so the emitted ``scan_lo`` column — the effective
+        bound the reader actually honored — makes the contract
+        value-checkable: if the engine ever stopped offering the
+        filter, scan_lo would read 0 and extra rows would appear,
+        and the DuckDB oracle would hash-mismatch."""
+
+        def pushFilters(self, filters):
+            for f in filters:
+                name = type(f).__name__
+                col = getattr(f, "attribute", None)
+                if name == "IsNotNull" and col == ("id",):
+                    continue  # generator never emits nulls
+                if name == "GreaterThanOrEqual" and col == ("id",):
+                    self.lo = max(self.lo, f.value)
+                elif name == "GreaterThan" and col == ("id",):
+                    self.lo = max(self.lo, f.value + 1)
+                else:
+                    yield f  # unsupported → engine applies it
+
+        def read(self, partition):
+            import pyarrow as pa
+
+            for batch in super().read(partition):
+                yield batch.append_column(
+                    "scan_lo", pa.array([self.lo] * batch.num_rows, pa.int64())
+                )
 
     class DeterministicRangeSource(DataSource):
         @classmethod
@@ -82,9 +137,31 @@ def _register_source(spark: SparkSession) -> None:
         def reader(self, schema):
             return _RangeReader()
 
+    class PushdownRangeSource(DataSource):
+        @classmethod
+        def name(cls) -> str:
+            return "mrs_range_pushdown"
+
+        def schema(self) -> str:
+            return "id bigint, bucket bigint, val bigint, scan_lo bigint"
+
+        def reader(self, schema):
+            return _PushdownReader()
+
     # re-registration under the same name is an overwrite, so this is
     # idempotent across queries in one session
-    spark.dataSource.register(DeterministicRangeSource)
+    _register(spark, DeterministicRangeSource, PushdownRangeSource)
+
+
+def _bucket_totals(df: DataFrame, *extra) -> DataFrame:
+    """Per-bucket row count and id/val sums (plus ``extra``
+    aggregates): the relation every range-source slug checks."""
+    return df.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("id").alias("sum_id"),
+        F.sum("val").alias("sum_val"),
+        *extra,
+    )
 
 
 def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,16 +169,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     as N_PARTS parallel tasks (one per InputPartition), then one small
     16-key shuffle."""
     _register_source(spark)
-    df = spark.read.format("mrs_range").load()
-    return (
-        df.groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("id").alias("sum_id"),
-            F.sum("val").alias("sum_val"),
-        )
-        .orderBy("bucket")
-    )
+    return _bucket_totals(spark.read.format("mrs_range").load()).orderBy("bucket")
 
 
 ORACLE["source_python_datasource"] = f"""
@@ -119,81 +187,6 @@ FROM src GROUP BY bucket ORDER BY bucket
 PUSHDOWN_THRESH = 3000
 
 
-def _register_pushdown_source(spark: SparkSession) -> None:
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _Part(InputPartition):
-        def __init__(self, start: int, end: int) -> None:
-            self.start, self.end = start, end
-
-    class _PushdownReader(DataSourceReader):
-        """Filter-pushdown-capable reader (Spark 4.1 ``pushFilters``):
-        absorbs ``id >= v`` / ``id > v`` (and the planner's implicit
-        IsNotNull), PRUNES whole partitions below the bound at
-        planning time, and slices the survivor shard — the Python-
-        connector analogue of parquet row-group skipping. Absorbed
-        filters are the source's obligation (Spark does NOT re-apply
-        them), so the emitted ``scan_lo`` column — the effective
-        bound the reader actually honored — makes the contract
-        value-checkable: if the engine ever stopped offering the
-        filter, scan_lo would read 0 and extra rows would appear,
-        and the DuckDB oracle would hash-mismatch."""
-
-        def __init__(self) -> None:
-            self._lo = 0
-
-        def pushFilters(self, filters):
-            for f in filters:
-                name = type(f).__name__
-                col = getattr(f, "attribute", None)
-                if name == "IsNotNull" and col == ("id",):
-                    continue  # generator never emits nulls
-                if name == "GreaterThanOrEqual" and col == ("id",):
-                    self._lo = max(self._lo, f.value)
-                elif name == "GreaterThan" and col == ("id",):
-                    self._lo = max(self._lo, f.value + 1)
-                else:
-                    yield f  # unsupported → engine applies it
-
-        def partitions(self):
-            step = N_ROWS // N_PARTS
-            shards = [
-                _Part(i * step, (i + 1) * step if i < N_PARTS - 1 else N_ROWS)
-                for i in range(N_PARTS)
-            ]
-            # planning-time pruning: shards entirely below the bound
-            # never become tasks
-            return [s for s in shards if s.end > self._lo]
-
-        def read(self, partition):
-            import pyarrow as pa
-
-            lo = self._lo
-            ids = list(range(max(partition.start, lo), partition.end))
-            yield pa.record_batch(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array([i % 16 for i in ids], pa.int64()),
-                    pa.array([(i * i) % 9973 for i in ids], pa.int64()),
-                    pa.array([lo] * len(ids), pa.int64()),
-                ],
-                names=["id", "bucket", "val", "scan_lo"],
-            )
-
-    class PushdownRangeSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "mrs_range_pushdown"
-
-        def schema(self) -> str:
-            return "id bigint, bucket bigint, val bigint, scan_lo bigint"
-
-        def reader(self, schema):
-            return _PushdownReader()
-
-    spark.dataSource.register(PushdownRangeSource)
-
-
 def source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicate pushdown through a PYTHON data source: the query's
     ``id >= {thresh}`` reaches the connector's ``pushFilters``, which
@@ -202,23 +195,14 @@ def source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min'd per group) certifies the absorbed bound end-to-end; see
     ``_PushdownReader`` for why a silent pushdown regression cannot
     pass the oracle."""
-    _register_pushdown_source(spark)
+    _register_source(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     df = (
         spark.read.format("mrs_range_pushdown")
         .load()
         .filter(F.col("id") >= PUSHDOWN_THRESH)
     )
-    return (
-        df.groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("id").alias("sum_id"),
-            F.sum("val").alias("sum_val"),
-            F.min("scan_lo").alias("scan_lo"),
-        )
-        .orderBy("bucket")
-    )
+    return _bucket_totals(df, F.min("scan_lo").alias("scan_lo")).orderBy("bucket")
 
 
 source_python_pushdown.__doc__ = source_python_pushdown.__doc__.format(
@@ -308,7 +292,13 @@ def _register_sink(spark: SparkSession) -> None:
         def writer(self, schema, overwrite):
             return _JsonDirWriter(self.options)
 
-    spark.dataSource.register(JsonDirSink)
+    _register(spark, JsonDirSink)
+    # a write resolves the sink's name through the calling thread's
+    # active JVM session, which threads other than the one that built
+    # the session lack (DATA_SOURCE_NOT_FOUND from a thread pool)
+    spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
+        spark._jsparkSession
+    )
 
 
 def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,16 +312,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register_source(spark)
     _register_sink(spark)
-    agg = (
-        spark.read.format("mrs_range")
-        .load()
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("id").alias("sum_id"),
-            F.sum("val").alias("sum_val"),
-        )
-    )
+    agg = _bucket_totals(spark.read.format("mrs_range").load())
     out = scratch_dir(prefix="mrs_pysink_")
     agg.write.format("mrs_jsonsink").option("path", out).mode("append").save()
     return (
@@ -389,7 +370,7 @@ def _register_stream_source(spark: SparkSession) -> None:
         def simpleStreamReader(self, schema):
             return _RangeStreamReader()
 
-    spark.dataSource.register(DeterministicRangeStream)
+    _register(spark, DeterministicRangeStream)
 
 
 def _register_partitioned_stream_source(spark: SparkSession) -> None:
@@ -461,56 +442,20 @@ def _register_partitioned_stream_source(spark: SparkSession) -> None:
         def streamReader(self, schema):
             return _PartitionedRangeStreamReader()
 
-    spark.dataSource.register(PartitionedRangeStream)
+    _register(spark, PartitionedRangeStream)
 
 
 def source_python_stream_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same relation and drain protocol as ``source_python_stream``,
-    ingested through the PARTITIONED stream reader: one micro-batch ×
-    8 executor-parallel splits. Hash-equality against the batch
+    """Same relation as ``source_python_stream``, ingested through the
+    PARTITIONED stream reader, which reports its full range to
+    ``availableNow``: one micro-batch × 8 executor-parallel splits. Hash-equality against the batch
     oracle proves no split was dropped, duplicated, or mis-ranged —
     the partition-planning contract, on top of exactly-once."""
-    import time
-
-    from mapreduce_rust_spark.session import scratch_dir
+    from mapreduce_rust_spark.streaming.queries import run_available_now
 
     _register_partitioned_stream_source(spark)
     sdf = spark.readStream.format("mrs_range_pstream").load()
-    agg = sdf.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("id").alias("sum_id"),
-        F.sum("val").alias("sum_val"),
-    )
-    name = "mrs_pstream_sink"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    target = str(min(spark.sparkContext.defaultParallelism, 16))
-    if old_parts != target:
-        spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(processingTime="0 seconds")
-            .option("checkpointLocation", scratch_dir(prefix="mrs_pstream_ckpt_"))
-            .start()
-        )
-        try:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                got = spark.sql(
-                    f"SELECT coalesce(sum(n), 0) AS c FROM {name}"
-                ).collect()[0]["c"]
-                if got >= N_ROWS:
-                    break
-                time.sleep(0.05)
-        finally:
-            query.stop()
-            query.awaitTermination(30)
-    finally:
-        if old_parts != target:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name).orderBy("bucket")
+    return run_available_now(_bucket_totals(sdf), "complete").orderBy("bucket")
 
 
 ORACLE["source_python_stream_partitioned"] = ORACLE["source_python_datasource"]
@@ -525,49 +470,15 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the streaming connector delivered exactly-once semantics
     end-to-end (no dropped or duplicated batch), not just that the
     query ran. availableNow drains only one read() for simple stream
-    readers, so the run uses a continuous trigger with a bounded
-    drain: poll the sink until all rows are absorbed, then stop."""
-    import time
-
-    from mapreduce_rust_spark.session import scratch_dir
+    readers, so the stream runs back-to-back micro-batches until its
+    progress reports all N_ROWS input rows, then stops."""
+    from mapreduce_rust_spark.streaming.queries import stream_to_memory
 
     _register_stream_source(spark)
     sdf = spark.readStream.format("mrs_range_stream").load()
-    agg = sdf.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("id").alias("sum_id"),
-        F.sum("val").alias("sum_val"),
-    )
-    name = "mrs_pystream_sink"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    target = str(min(spark.sparkContext.defaultParallelism, 16))
-    if old_parts != target:
-        spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(processingTime="0 seconds")
-            .option("checkpointLocation", scratch_dir(prefix="mrs_pystream_ckpt_"))
-            .start()
-        )
-        try:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                got = spark.sql(
-                    f"SELECT coalesce(sum(n), 0) AS c FROM {name}"
-                ).collect()[0]["c"]
-                if got >= N_ROWS:
-                    break
-                time.sleep(0.05)
-        finally:
-            query.stop()
-            query.awaitTermination(30)
-    finally:
-        if old_parts != target:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name).orderBy("bucket")
+    return stream_to_memory(
+        _bucket_totals(sdf), "complete", until_rows=N_ROWS
+    ).orderBy("bucket")
 
 
 ORACLE["source_python_stream"] = ORACLE["source_python_datasource"]

@@ -25,19 +25,24 @@ high-cardinality, even spread across executors.
 from __future__ import annotations
 
 import os
-
-from mapreduce_rust_spark.session import scratch_dir
+import threading
+import time
 from itertools import count
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql
 from mapreduce_rust_spark.functions.text import tokenize_whitespace
+from mapreduce_rust_spark.session import scratch_dir
 
 ORACLE: dict[str, str] = {}
 
 _run_ids = count()
+_START_LOCK = threading.Lock()
+_PARTITIONS = "spark.sql.shuffle.partitions"
+_DRAIN_TIMEOUT_S = 120.0
 
 
 def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -63,57 +68,118 @@ def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_ts(sdf)
 
 
-def run_available_now(
-    sdf: DataFrame, output_mode: str, partitions: int | None = None
-) -> DataFrame:
-    """Execute a streaming DataFrame to completion over the currently
-    available input and return the memory sink as a batch frame.
+def run_stream(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    partitions: int | None = None,
+    until_rows: int | None = None,
+) -> None:
+    """Start ``writer`` with ``spark.sql.shuffle.partitions`` pinned
+    and run it to the end of the available input.
 
     Streaming state stores take their partition count from
     ``spark.sql.shuffle.partitions`` at first checkpoint and get NO
     AQE coalescing — in a bare session (the driver's) the 200-default
     means 200 state dirs per stateful operator per micro-batch, a
-    ~4× slowdown at test scale. Pin it to the session's core count
-    for the duration of the run, then restore (each run here starts a
-    fresh checkpoint, so the scoped change is safe; production
-    streams size this deliberately and never pass through here)."""
-    name = f"mrs_stream_{next(_run_ids)}"
-    spark = sdf.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # State-store COMMIT overhead (delta file per store per partition
-    # per micro-batch) dominates a bounded local replay: a stream-
-    # stream join carries 4 stores/partition, and measured wall-clock
-    # at 32 vs 8 partitions was 9.6 s vs 3.3 s for the same job. But
-    # compute-heavy streams lose parallelism under a tight cap — the
-    # hopping-window agg measured 3.9 s at 8 vs 1.4 s at 16 in one
-    # session, while the state-heavy slugs were within noise of 8 —
-    # so 16 is the local-replay compromise. A production stream sizes
-    # this to its executor count BEFORE first checkpoint (it is
-    # frozen thereafter) where per-partition commit cost amortizes
-    # over real per-batch volume.
-    # callers with unusually state-store-heavy plans (the stream-
-    # stream join: 4 stores/partition) pass an explicit lower cap
+    ~4× slowdown at test scale. State-store COMMIT overhead (delta
+    file per store per partition per micro-batch) dominates a bounded
+    local replay: a stream-stream join carries 4 stores/partition,
+    and measured wall-clock at 32 vs 8 partitions was 9.6 s vs 3.3 s
+    for the same job. But compute-heavy streams lose parallelism
+    under a tight cap — the hopping-window agg measured 3.9 s at 8
+    vs 1.4 s at 16 in one session — so the default pin is
+    min(cores, 16); callers with state-store-heavy plans pass a lower
+    ``partitions``. A production stream sizes this to its executor
+    count BEFORE first checkpoint (it is frozen thereafter).
+
+    The pin lasts only for ``start()`` (see ``run_available_now``);
+    a module lock makes the set/start/restore atomic across threads
+    starting streams.
+
+    ``until_rows=None`` runs ``trigger(availableNow=True)`` to
+    completion. Sources that cannot drain under ``availableNow``
+    (a ``SimpleDataSourceStreamReader`` gets one ``read()``) pass the
+    number of input rows to wait for instead: the stream runs
+    back-to-back micro-batches until its progress reports that many
+    input rows (a batch's progress is posted after its sink commit),
+    then stops. A stream that dies raises its exception at once; one
+    that is still short at the deadline raises ``TimeoutError``."""
     target = str(
         partitions
         if partitions is not None
         else min(spark.sparkContext.defaultParallelism, 16)
     )
-    if old_parts != target:
-        spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
-        query = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", scratch_dir(prefix="mrs_ckpt_"))
-            .start()
-        )
+    if until_rows is None:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime="0 seconds")
+    with _START_LOCK:
+        parent = spark.conf.get(_PARTITIONS)
+        spark.conf.set(_PARTITIONS, target)
+        try:
+            query = writer.start()
+        finally:
+            spark.conf.set(_PARTITIONS, parent)
+    if until_rows is None:
         query.awaitTermination()
+        return
+    deadline = time.monotonic() + _DRAIN_TIMEOUT_S
+    try:
+        # awaitTermination raises the stream's exception as soon as it
+        # has failed, so a dead stream is never polled to the deadline
+        while not query.awaitTermination(0.05):
+            seen = sum(p.numInputRows for p in query.recentProgress)
+            if seen >= until_rows:
+                return
+            if time.monotonic() >= deadline:
+                raise TimeoutError(
+                    f"stream {query.name or query.id} saw {seen} of"
+                    f" {until_rows} rows in {_DRAIN_TIMEOUT_S:.0f} s"
+                )
+        raise RuntimeError(f"stream {query.name or query.id} stopped early")
     finally:
-        if old_parts != target:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(name)
+        query.stop()
+
+
+def run_available_now(
+    sdf: DataFrame, output_mode: str, partitions: int | None = None
+) -> DataFrame:
+    """Run a streaming DataFrame over the currently available input
+    into a memory sink (``run_stream``, ``availableNow``) and return
+    the sink as a batch frame.
+
+    ``spark.sql.shuffle.partitions`` is pinned (``partitions``, else
+    min(cores, 16)) only while ``start()`` runs. That is enough on
+    Spark 4.1.2 because the ``StreamExecution`` constructor, which
+    ``start()`` runs, calls ``cloneSession()``: the stream keeps the
+    pinned value (its checkpoint's offset log records it) while the
+    parent session has its own value back before the first
+    micro-batch."""
+    return stream_to_memory(sdf, output_mode, partitions)
+
+
+def stream_to_memory(
+    sdf: DataFrame,
+    output_mode: str,
+    partitions: int | None = None,
+    until_rows: int | None = None,
+) -> DataFrame:
+    """``run_stream`` into a memory sink under a name unique to this
+    run; the sink's temp view is dropped once its frame is taken (the
+    frame keeps its own reference to the sink's rows)."""
+    spark = sdf.sparkSession
+    name = f"mrs_stream_{next(_run_ids)}"
+    writer = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", scratch_dir(prefix="mrs_ckpt_"))
+    )
+    try:
+        run_stream(spark, writer, partitions, until_rows)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -587,27 +653,15 @@ def streaming_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts — state corruption, lost micro-batches, or misrouted keys
     would all surface here. Reading state scales with state size (one
     row per key per shard), never with the replayed stream."""
-    from mapreduce_rust_spark.session import scratch_dir
-
     ev = read_stream_table(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
     ckpt = scratch_dir(prefix="mrs_state_inspect_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    target = str(min(spark.sparkContext.defaultParallelism, 16))
-    if old_parts != target:
-        spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
-        query = (
-            agg.writeStream.format("noop")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        if old_parts != target:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    run_stream(
+        spark,
+        agg.writeStream.format("noop")
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt),
+    )
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),
@@ -634,9 +688,6 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     final table is value-checkable: hash-equality against the batch
     argmax proves no batch was dropped, duplicated, or misordered
     through the sink protocol."""
-    import os
-    import time
-
     from pyspark.sql import Window
 
     from mapreduce_rust_spark.sources.pysource import (
@@ -647,7 +698,7 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
     _register_stream_source(spark)
     sdf = spark.readStream.format("mrs_range_stream").load()
     base = scratch_dir(prefix="mrs_fbu_")
-    holder: dict[str, object] = {"path": None, "max_id": -1}
+    holder: dict[str, str | None] = {"path": None}
 
     def upsert(bdf: DataFrame, batch_id: int) -> None:
         cur = bdf.select("bucket", "id", "val")
@@ -663,35 +714,14 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame
         # 16 rows per version: one file, no shuffle-width file churn
         latest.coalesce(1).write.mode("overwrite").parquet(new_path)
         holder["path"] = new_path
-        # progress marker computed IN the callback (runs on the
-        # driver) so the drain loop below never launches poll jobs
-        top = bdf.sparkSession.read.parquet(new_path).agg(F.max("id")).collect()[0][0]
-        if top is not None:
-            holder["max_id"] = max(int(holder["max_id"]), int(top))
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    target = str(min(spark.sparkContext.defaultParallelism, 16))
-    if old_parts != target:
-        spark.conf.set("spark.sql.shuffle.partitions", target)
-    try:
-        query = (
-            sdf.writeStream.foreachBatch(upsert)
-            .trigger(processingTime="0 seconds")
-            .option("checkpointLocation", scratch_dir(prefix="mrs_fbu_ckpt_"))
-            .start()
-        )
-        try:
-            deadline = time.time() + 120
-            while time.time() < deadline:
-                if int(holder["max_id"]) == N_ROWS - 1:
-                    break
-                time.sleep(0.05)
-        finally:
-            query.stop()
-            query.awaitTermination(30)
-    finally:
-        if old_parts != target:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    run_stream(
+        spark,
+        sdf.writeStream.foreachBatch(upsert).option(
+            "checkpointLocation", scratch_dir(prefix="mrs_fbu_ckpt_")
+        ),
+        until_rows=N_ROWS,
+    )
     return (
         spark.read.parquet(holder["path"])
         .select(

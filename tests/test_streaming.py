@@ -261,10 +261,10 @@ def test_pushdown_source_fallback_for_unsupported_filters(spark):
     from mapreduce_rust_spark.sources.pysource import (
         N_ROWS,
         PUSHDOWN_THRESH,
-        _register_pushdown_source,
+        _register_source,
     )
 
-    _register_pushdown_source(spark)
+    _register_source(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     df = (
         spark.read.format("mrs_range_pushdown")
@@ -277,3 +277,144 @@ def test_pushdown_source_fallback_for_unsupported_filters(spark):
     ids = sorted(r["id"] for r in rows)
     assert ids == [i for i in range(PUSHDOWN_THRESH, N_ROWS) if i % 2 == 0]
     assert {r["scan_lo"] for r in rows} == {PUSHDOWN_THRESH}
+
+
+def _offset_log_conf(ckpt: str) -> dict:
+    """The session conf a stream's checkpoint recorded for its first
+    batch (offset log: version line, then the batch metadata JSON)."""
+    import json
+    import os
+
+    with open(os.path.join(ckpt, "offsets", "0")) as fh:
+        return json.loads(fh.read().splitlines()[1])["conf"]
+
+
+def test_run_stream_pins_partitions_for_the_stream_only(spark, sf_dir, tmp_path):
+    """The stream runs (and checkpoints) with the pinned partition
+    count while the parent session keeps its own value, both during
+    the micro-batches and after."""
+    from mapreduce_rust_spark.streaming.queries import read_stream_table, run_stream
+
+    key = "spark.sql.shuffle.partitions"
+    parent = spark.conf.get(key)
+    target = 3 if parent != "3" else 5
+    seen_in_batch = []
+    ckpt = str(tmp_path / "ckpt")
+
+    def record(bdf, batch_id):
+        bdf.count()  # a stateful batch must consume every partition
+        seen_in_batch.append(spark.conf.get(key))
+
+    run_stream(
+        spark,
+        read_stream_table(spark, sf_dir, "nation")
+        .groupBy("n_regionkey")
+        .count()
+        .writeStream.outputMode("complete")
+        .foreachBatch(record)
+        .option("checkpointLocation", ckpt),
+        partitions=target,
+    )
+    assert seen_in_batch and set(seen_in_batch) == {parent}
+    assert spark.conf.get(key) == parent
+    assert _offset_log_conf(ckpt)[key] == str(target)
+
+
+def test_concurrent_run_available_now_keeps_parent_conf(spark, sf_dir):
+    """More threads than cores start streams at once, with explicit
+    pins and with the default: every result is exact and the parent's
+    value (a bare session's 200 here) survives them all."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from mapreduce_rust_spark.sources.tables import load_table
+    from mapreduce_rust_spark.streaming.queries import (
+        read_stream_table,
+        run_available_now,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    want = {
+        r["n_regionkey"]: r["count"]
+        for r in load_table(spark, sf_dir, "nation").groupBy("n_regionkey").count().collect()
+    }
+
+    def run(partitions):
+        agg = read_stream_table(spark, sf_dir, "nation").groupBy("n_regionkey").count()
+        out = run_available_now(agg, "complete", partitions)
+        return {r["n_regionkey"]: r["count"] for r in out.collect()}
+
+    pins = [8, None, 3, None, 5, None]
+    switch = sys.getswitchinterval()
+    spark.conf.set(key, "200")
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=len(pins)) as pool:
+            results = list(pool.map(run, pins, timeout=300))
+        assert spark.conf.get(key) == "200"
+    finally:
+        sys.setswitchinterval(switch)
+        spark.conf.set(key, before)
+    assert results == [want] * len(pins)
+
+
+def test_stream_drain_fails_fast_when_the_reader_raises(spark):
+    """A stream whose reader raises must surface the reader's error as
+    soon as the query dies, not poll on until the drain deadline."""
+    import time
+
+    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+    from mapreduce_rust_spark.streaming.queries import stream_to_memory
+
+    class _RaisingReader(SimpleDataSourceStreamReader):
+        def initialOffset(self):
+            return {"pos": 0}
+
+        def read(self, start):
+            raise ValueError("range reader lost its shard")
+
+        def readBetweenOffsets(self, start, end):
+            return iter([])
+
+    class RaisingStream(DataSource):
+        @classmethod
+        def name(cls) -> str:
+            return "mrs_test_raising_stream"
+
+        def schema(self) -> str:
+            return "id bigint"
+
+        def simpleStreamReader(self, schema):
+            return _RaisingReader()
+
+    spark.dataSource.register(RaisingStream)
+    sdf = spark.readStream.format("mrs_test_raising_stream").load()
+    t0 = time.monotonic()
+    with pytest.raises(Exception, match="range reader lost its shard"):
+        stream_to_memory(sdf, "append", until_rows=10)
+    assert time.monotonic() - t0 < 10
+    assert not spark.streams.active
+
+
+def test_stream_runs_leave_no_memory_sink_views(spark, sf_dir):
+    """Each run's memory sink gets its own name and its view is
+    dropped once the frame is taken; the frames still compute."""
+    from mapreduce_rust_spark.sources.pysource import N_ROWS, source_python_stream
+    from mapreduce_rust_spark.streaming.queries import (
+        read_stream_table,
+        run_available_now,
+    )
+
+    frames = [source_python_stream(spark, sf_dir) for _ in range(2)]
+    frames += [
+        run_available_now(read_stream_table(spark, sf_dir, "nation"), "append")
+        for _ in range(2)
+    ]
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("mrs_stream_")]
+    assert left == []
+    for df in frames[:2]:
+        assert df.agg({"n": "sum"}).collect()[0][0] == N_ROWS
+    for df in frames[2:]:
+        assert df.count() == 25

@@ -123,11 +123,11 @@ def main() -> int:
             for label, side, acc in (("old", old, olds), ("new", new, news)):
                 spark.sparkContext.setJobDescription(f"ab:{name}:{label}:{i}")
                 with side:
-                    t0 = time.time()
+                    t0 = time.perf_counter()
                     side.queries[name](spark, sf_dir).write.format("noop").mode(
                         "overwrite"
                     ).save()
-                    acc.append(round(time.time() - t0, 2))
+                    acc.append(round(time.perf_counter() - t0, 2))
                 spark.catalog.clearCache()
         print(
             f"AB {name}: old={olds} min={min(olds)} med={statistics.median(olds)} | "

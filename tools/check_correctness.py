@@ -146,7 +146,7 @@ def main() -> int:
     for name, fn in sorted(qs.items()):
         if only and name not in only:
             continue
-        t0 = time.time()
+        t0 = time.perf_counter()
         try:
             spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
@@ -159,7 +159,7 @@ def main() -> int:
             spark.catalog.clearCache()
         if name not in oracles:
             print(f"ok?  {name}: rows={len(spark_pdf)} (no oracle — rows-only) "
-                  f"[{time.time()-t0:.1f}s]")
+                  f"[{time.perf_counter()-t0:.1f}s]")
             if len(spark_pdf) == 0:
                 print(f"     WARNING {name}: zero rows")
             continue
@@ -172,11 +172,11 @@ def main() -> int:
         problems = compare(name, spark_pdf, duck_pdf)
         if problems:
             n_fail += 1
-            print(f"FAIL {name}: [{time.time()-t0:.1f}s]")
+            print(f"FAIL {name}: [{time.perf_counter()-t0:.1f}s]")
             for p in problems:
                 print(f"     {p}")
         else:
-            print(f"PASS {name}: rows={len(spark_pdf)} [{time.time()-t0:.1f}s]")
+            print(f"PASS {name}: rows={len(spark_pdf)} [{time.perf_counter()-t0:.1f}s]")
     print(f"\n{'ALL PASS' if n_fail == 0 else f'{n_fail} FAILURES'}")
     return 1 if n_fail else 0
 

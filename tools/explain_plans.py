@@ -61,39 +61,22 @@ def audit_one(spark, sf_dir: str, name: str, fn) -> PlanReport:
     )
 
 
-# Builders in these modules mutate session conf around their run
-# (shuffle-partition pinning for state stores) or execute streaming
-# queries; they must not interleave with other threads' conf reads.
-_SEQUENTIAL_MODULES = (
-    "mapreduce_rust_spark.streaming.queries",
-    "mapreduce_rust_spark.sources.pysource",
-)
-
-
 def audit(spark, sf_dir: str, names=None, workers: int = 8) -> list[PlanReport]:
-    """Plan-audit every picked slug. Plan construction is almost
-    entirely py4j/Catalyst time (GIL released), so the safe slugs are
-    audited from a thread pool — the full-registry audit dropped from
-    ~5.5 min sequential to well under 2 on 32 cores — while builders
-    that mutate session conf (streaming family, python datasources)
-    run sequentially afterwards."""
+    """Plan-audit every picked slug from a thread pool. Plan
+    construction is almost entirely py4j/Catalyst time (GIL released),
+    so the full-registry audit dropped from ~5.5 min sequential to
+    well under 2 on 32 cores. Streaming builders run their stream
+    inside the build; they pin session conf only inside
+    ``streaming.queries.run_stream``'s locked start and every sink
+    name is unique, so they share the pool."""
     from concurrent.futures import ThreadPoolExecutor
 
     from mapreduce_rust_spark.registry import queries
 
     qs = queries()
     picked = [n for n in (sorted(names) if names else sorted(qs)) if n in qs]
-    par = [n for n in picked if qs[n].__module__ not in _SEQUENTIAL_MODULES]
-    seq = [n for n in picked if qs[n].__module__ in _SEQUENTIAL_MODULES]
-    out: dict[str, PlanReport] = {}
     with ThreadPoolExecutor(max_workers=workers) as pool:
-        for rep in pool.map(
-            lambda n: audit_one(spark, sf_dir, n, qs[n]), par
-        ):
-            out[rep.name] = rep
-    for n in seq:
-        out[n] = audit_one(spark, sf_dir, n, qs[n])
-    return [out[n] for n in picked]
+        return list(pool.map(lambda n: audit_one(spark, sf_dir, n, qs[n]), picked))
 
 
 def main() -> int:

@@ -56,22 +56,22 @@ def main() -> int:
     for name in slugs:
         fn = qmap[name]
         spark.sparkContext.setJobDescription(f"profile:{name}")
-        t0 = time.time()
+        t0 = time.perf_counter()
         df = fn(spark, sf_dir)
-        t_build = time.time() - t0
+        t_build = time.perf_counter() - t0
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         plan = buf.getvalue()
         with open(os.path.join(PLANS_DIR, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
-        t0 = time.time()
+        t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
-        t_cold = time.time() - t0
+        t_cold = time.perf_counter() - t0
         spark.catalog.clearCache()
-        t0 = time.time()
+        t0 = time.perf_counter()
         qmap[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        t_warm = time.time() - t0
+        t_warm = time.perf_counter() - t0
         spark.catalog.clearCache()
         out[name] = {
             "build_s": round(t_build, 3),

@@ -284,16 +284,15 @@ def main() -> int:
         k: [v["first"], v["rerun"]]
         for k, v in sorted(remeasured.items(), key=lambda kv: -kv[1]["first"])[:10]
     }
-    # One-time memoized index builds, charged visibly (r10 verdict ask
-    # #2): adjudicated per-query times for memoized families are warm
-    # numbers, so the build cost must appear somewhere in the artifact.
-    # Full map in the sidecar; the line carries the total.
-    try:
-        from mapreduce_rust_spark.operators.dedup import INDEX_BUILD_SECONDS
-    except Exception:  # noqa: BLE001
-        INDEX_BUILD_SECONDS = {}
+    from mapreduce_rust_spark.indexes import INDEX_BUILD_SECONDS
+
+    # Session-index build seconds per tag, charged visibly because the
+    # adjudicated times of index-sharing slugs are warm numbers. Each
+    # tag's time is exclusive: a nested build (sig-k3 inside
+    # pairs-k3-t0.5) is charged to its own tag only, so the total is
+    # no more than the time spent building.
+    side["index_builds"] = {k: round(v, 3) for k, v in INDEX_BUILD_SECONDS.items()}
     index_build_total = round(sum(INDEX_BUILD_SECONDS.values()), 3)
-    side["index_builds"] = dict(INDEX_BUILD_SECONDS)
     side["index_build_total_sec"] = index_build_total
     with open(side_path, "w") as fh:
         json.dump(side, fh, sort_keys=True)

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql, single_partition
 from mapreduce_rust_spark.functions.text import tokenize_whitespace
+from mapreduce_rust_spark.indexes import session_index
 from mapreduce_rust_spark.sources.tables import fan_out, load_table
 
 ORACLE: dict[str, str] = {}
@@ -1462,10 +1463,8 @@ def corpus_decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output per flagged corpus doc: its best bench match (highest
     verified jaccard, lowest bench id on ties)."""
     from mapreduce_rust_spark.operators.dedup import (
-        _SIG_INDEX,
         N_BANDS,
         ROWS_PER_BAND,
-        _memoized,
         shingle_index,
         signature_index,
     )
@@ -1493,14 +1492,11 @@ def corpus_decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("bid"), "band", "sig"
         )
     )
-    # Memoized per (sf_dir) like signature_index: this slug is also
-    # invoked inside pipeline_decontaminate, and a per-call persist()
-    # leaked one cached frame per invocation for the session lifetime
-    # (r09 ADVICE). The memoized localCheckpoint is built once and
-    # shared by every caller.
-    cand = _memoized(
-        _SIG_INDEX,
-        (sf_dir, "decon-mh-cand"),
+    # A session index like signature_index: this slug is also invoked
+    # inside pipeline_decontaminate, and a per-call persist() would
+    # leak one cached frame per invocation for the session lifetime.
+    cand = session_index(
+        spark, sf_dir, "decon-mh-cand",
         lambda: bands.filter(~is_bench)
         .join(bench_bands, ["band", "sig"])
         .select(F.col("doc_id").alias("cid"), "bid")
@@ -1829,13 +1825,10 @@ def _qc_train_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def qc_beta_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (per session) trained model — the trainer slug and the
+    """Session index of the trained model — the trainer slug and the
     per-source scorer slug describe the SAME fit by construction."""
-    from mapreduce_rust_spark.operators.dedup import _SIG_INDEX, _memoized
-
-    return _memoized(
-        _SIG_INDEX,
-        (sf_dir, f"qc-beta-b{QC_BUCKETS}-r{QC_ROUNDS}"),
+    return session_index(
+        spark, sf_dir, f"qc-beta-b{QC_BUCKETS}-r{QC_ROUNDS}",
         lambda: _qc_train_beta(spark, sf_dir),
     )
 

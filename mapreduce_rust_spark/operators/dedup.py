@@ -45,6 +45,8 @@ from mapreduce_rust_spark.functions.text import (
     tokenize_whitespace,
     word_shingles,
 )
+# INDEX_BUILD_SECONDS is re-exported: perfbench reads the ledger from here
+from mapreduce_rust_spark.indexes import INDEX_BUILD_SECONDS, session_index  # noqa: F401
 from mapreduce_rust_spark.sources.tables import fan_out, load_table
 
 ORACLE: dict[str, str] = {}
@@ -190,13 +192,12 @@ def pair_intersection_stats(
 def pair_stats_index(
     spark: SparkSession, sf_dir: str, k: int = 3, max_df: int = MAX_SHINGLE_DF
 ) -> DataFrame:
-    """Memoized (per session) pair-intersection statistics over the
+    """Session index of pair-intersection statistics over the
     documents shingle index — consumed by both the Jaccard and the
     containment scorers, so the shingle self-join runs once per
     dataset instead of once per metric."""
-    return _memoized(
-        _SIG_INDEX,
-        (sf_dir, f"pairstats-k{k}-df{max_df}"),
+    return session_index(
+        spark, sf_dir, f"pairstats-k{k}-df{max_df}",
         lambda: pair_intersection_stats(
             shingle_index(spark, sf_dir, k), "doc_id", max_df=max_df
         ),
@@ -259,57 +260,11 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str, k: int = 3) ->
     )
 
 
-# Session-scoped signature index: the MinHash signature table is THE
-# shared artifact of a dedup pipeline — candidates, verification, and
-# clustering all consume it. Production materializes it once (a
-# parquet "index build") and every downstream job reads it; here the
-# same sharing is a memoized localCheckpoint keyed by the dataset.
-# Correctness is unaffected (signatures are deterministic); cost-wise
-# the shingle+hash pass runs once per dataset per session instead of
-# once per consuming query.
-_SIG_INDEX: dict[tuple[str, str], DataFrame] = {}
-
-# Wall-clock seconds spent building each memoized index this session,
-# keyed by the memo key's tag. The bench reports these so that
-# adjudicated per-query numbers (which are warm for memoized families)
-# don't hide the one-time build cost — every build is charged visibly
-# in the artifact (r10 verdict ask #2).
-INDEX_BUILD_SECONDS: dict[str, float] = {}
-
-
-# serializes concurrent builds of the same index (the plan-audit test
-# builds plans from a thread pool; without the lock two threads would
-# both run the eager checkpoint)
-_MEMO_LOCK = __import__("threading").RLock()
-
-
-def _memoized(cache: dict, key: tuple, build) -> DataFrame:
-    import time as _time
-
-    with _MEMO_LOCK:
-        cached = cache.get(key)
-        if cached is not None:
-            try:
-                cached.schema  # raises if the owning session is gone
-                return cached
-            except Exception:  # noqa: BLE001 — stale session: rebuild
-                cache.pop(key, None)
-        t0 = _time.perf_counter()
-        df = build().localCheckpoint()
-        cache[key] = df
-        tag = str(key[-1]) if isinstance(key, tuple) and key else str(key)
-        INDEX_BUILD_SECONDS[tag] = round(
-            INDEX_BUILD_SECONDS.get(tag, 0.0) + (_time.perf_counter() - t0), 3
-        )
-        return df
-
-
 def signature_index(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    """Memoized (per session) MinHash signature table for the
-    documents dataset at ``sf_dir``."""
-    return _memoized(
-        _SIG_INDEX,
-        (sf_dir, f"sig-k{k}"),
+    """Session index of the MinHash signature table for the documents
+    dataset at ``sf_dir``."""
+    return session_index(
+        spark, sf_dir, f"sig-k{k}",
         lambda: minhash_signatures(
             fan_out(load_table(spark, sf_dir, "documents")), "doc_id", "text", k
         ),
@@ -319,13 +274,12 @@ def signature_index(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
 def candidate_pairs_index(
     spark: SparkSession, sf_dir: str, threshold: float = 0.5, k: int = 3
 ) -> DataFrame:
-    """Memoized (per session) LSH candidate pairs at ``threshold`` —
+    """Session index of the LSH candidate pairs at ``threshold`` —
     the shared edge list of the dedup graph family (components,
     survivor selection, PageRank all consume the same pairs; without
     sharing, each re-runs the band self-join)."""
-    return _memoized(
-        _SIG_INDEX,
-        (sf_dir, f"pairs-k{k}-t{threshold}"),
+    return session_index(
+        spark, sf_dir, f"pairs-k{k}-t{threshold}",
         lambda: lsh_candidate_pairs(signature_index(spark, sf_dir, k), "doc_id").filter(
             F.col("est_sim") >= threshold
         ),
@@ -333,12 +287,11 @@ def candidate_pairs_index(
 
 
 def shingle_index(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    """Memoized (per session) distinct-shingle table — the second
+    """Session index of the distinct-shingle table — the second
     shared dedup artifact (exact Jaccard + LSH verification both
     consume it)."""
-    return _memoized(
-        _SIG_INDEX,
-        (sf_dir, f"shingle-k{k}"),
+    return session_index(
+        spark, sf_dir, f"shingle-k{k}",
         lambda: shingle_sets(
             fan_out(load_table(spark, sf_dir, "documents")), "doc_id", "text", k
         ),
@@ -600,15 +553,12 @@ def _gemm_side_input(path: str):
     return _GEMM_SIDE[path]
 
 
-_GEMM_PATHS: dict[tuple, str] = {}
-
-
 def embedding_near_dup_pairs(
     emb: DataFrame,
     id_col: str,
     vec_col: str,
     threshold: float = 0.3,
-    side_key: tuple | None = None,
+    sf_dir: str | None = None,
 ) -> DataFrame:
     """Brute-force cosine pairs ≥ threshold (the exactness baseline;
     the bucketed/ANN variants in similarity.py are the scale path).
@@ -635,20 +585,21 @@ def embedding_near_dup_pairs(
 
     from mapreduce_rust_spark.session import scratch_dir
 
-    # The side-input write is an index build: for a static dataset
-    # (``side_key`` set, e.g. the registry slugs keyed by sf_dir) it
-    # is memoized per session like signature_index, so re-invocations
-    # skip the write AND hit the executors' process-local matrix
-    # cache (same path → same _GEMM_SIDE entry). Callers scoring a
-    # non-static frame pass side_key=None and pay a fresh build.
-    side_path = _GEMM_PATHS.get(side_key) if side_key is not None else None
-    if side_path is None:
-        side_path = os.path.join(scratch_dir(prefix="mrs_gemm_"), "corpus")
+    def write_side() -> str:
+        path = os.path.join(scratch_dir(prefix="mrs_gemm_"), "corpus")
         emb.select(
             F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-        ).write.mode("overwrite").parquet(side_path)
-        if side_key is not None:
-            _GEMM_PATHS[side_key] = side_path
+        ).write.mode("overwrite").parquet(path)
+        return path
+
+    # When ``emb`` is the embeddings table of the dataset at ``sf_dir``,
+    # the side-input write is a session index: re-invocations skip the
+    # write AND hit the executors' process-local matrix cache (same
+    # path → same _GEMM_SIDE entry). Any other frame pays a fresh write.
+    if sf_dir is None:
+        side_path = write_side()
+    else:
+        side_path = session_index(emb.sparkSession, sf_dir, "gemm-emb", write_side)
 
     def block(batches):
         b_ids, b_mn = _gemm_side_input(side_path)
@@ -922,14 +873,13 @@ ORACLE["dedup_lsh_incremental"] = _lsh_incremental_oracle()
 
 
 def exact_census_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (per session) exact-duplicate census over the documents
+    """Session index of the exact-duplicate census over the documents
     dataset — (content_hash, keep_id, n_copies). Four slugs consume the
     identical frame (``dedup_exact``, both corpus-prep pipelines, the
     dedup funnel report); production materializes the hash census once
-    per corpus snapshot the same way (r09 verdict ask #6)."""
-    return _memoized(
-        _SIG_INDEX,
-        (sf_dir, "exact-census"),
+    per corpus snapshot the same way."""
+    return session_index(
+        spark, sf_dir, "exact-census",
         lambda: exact_duplicate_groups(
             load_table(spark, sf_dir, "documents"), "doc_id", "text"
         ),
@@ -1184,9 +1134,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (1 partition) vs 9.3 s (32) at sf0.1. Partitioning pays off only
     # when the A-side is large enough to dwarf the closure cost.
     emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_near_dup_pairs(
-        emb, "vec_id", "embedding", threshold=0.3, side_key=(sf_dir, "gemm-emb")
-    )
+    return embedding_near_dup_pairs(emb, "vec_id", "embedding", threshold=0.3, sf_dir=sf_dir)
 
 
 ORACLE["dedup_embedding_cosine"] = """

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql
+from mapreduce_rust_spark.indexes import session_index
 
 
 ORACLE: dict[str, str] = {}
@@ -108,22 +109,18 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id (the canonical survivor). Downstream: keep rows where
     node == comp, drop the rest.
 
-    Memoized per session like the signature index: the component
-    labeling is the third shared dedup artifact (survivor selection,
-    cluster stats, and reporting all consume it), so the LSH pair
-    generation + propagation loop runs once per dataset, not once per
-    consuming query."""
-    from mapreduce_rust_spark.operators.dedup import (
-        _SIG_INDEX,
-        _memoized,
-        candidate_pairs_index,
-    )
+    A session index like the signature index: the component labeling
+    is the third shared dedup artifact (survivor selection, cluster
+    stats, and reporting all consume it), so the LSH pair generation +
+    propagation loop runs once per dataset, not once per consuming
+    query."""
+    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
 
     def build():
         pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
         return connected_components(pairs, "d1", "d2").select("node", "comp")
 
-    return _memoized(_SIG_INDEX, (sf_dir, "components-0.5"), build)
+    return session_index(spark, sf_dir, "components-0.5", build)
 
 
 def _components_oracle() -> str:

@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql
+from mapreduce_rust_spark.indexes import session_index
 from mapreduce_rust_spark.sources.tables import fan_out, load_table
 
 ORACLE: dict[str, str] = {}
@@ -153,22 +154,18 @@ def _duel_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def duel_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (per session) duel table — every slug in the family
+    """Session index of the duel table — every slug in the family
     describes the SAME synthesized comparisons by construction."""
-    from mapreduce_rust_spark.operators.dedup import _SIG_INDEX, _memoized
-
-    return _memoized(
-        _SIG_INDEX,
-        (sf_dir, f"pref-duels-b{PREF_BLOCKS}-o{PREF_OFFSETS}-r{PREF_RATERS}"),
+    return session_index(
+        spark, sf_dir, f"pref-duels-b{PREF_BLOCKS}-o{PREF_OFFSETS}-r{PREF_RATERS}",
         lambda: _duel_base(spark, sf_dir),
     )
 
 
 def pair_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized aggregated pair table: one row per ORDERED pair
-    (i, j) with duel count ``n_ij`` and i's win count ``w_ij`` —
+    """Session index of the aggregated pair table: one row per ORDERED
+    pair (i, j) with duel count ``n_ij`` and i's win count ``w_ij`` —
     the shared input of every strength fit. ~2×OFFSETS rows per doc."""
-    from mapreduce_rust_spark.operators.dedup import _SIG_INDEX, _memoized
 
     def build() -> DataFrame:
         duels = duel_index(spark, sf_dir)
@@ -186,9 +183,8 @@ def pair_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_ij"), F.sum("win").alias("w_ij")
         )
 
-    return _memoized(
-        _SIG_INDEX,
-        (sf_dir, f"pref-pairs-b{PREF_BLOCKS}-o{PREF_OFFSETS}-r{PREF_RATERS}"),
+    return session_index(
+        spark, sf_dir, f"pref-pairs-b{PREF_BLOCKS}-o{PREF_OFFSETS}-r{PREF_RATERS}",
         build,
     )
 
@@ -240,14 +236,11 @@ def _bt_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bt_strengths_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (per session) fitted BT strength frame — the
+    """Session index of the fitted BT strength frame — the
     leaderboard, confidence, and duel-planner slugs describe the SAME
-    fit by construction (qc_beta_index pattern)."""
-    from mapreduce_rust_spark.operators.dedup import _SIG_INDEX, _memoized
-
-    return _memoized(
-        _SIG_INDEX,
-        (sf_dir, f"pref-bt-i{PREF_BT_ITERS}"),
+    fit by construction."""
+    return session_index(
+        spark, sf_dir, f"pref-bt-i{PREF_BT_ITERS}",
         lambda: _bt_fit(spark, sf_dir),
     )
 

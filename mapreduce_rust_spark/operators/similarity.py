@@ -29,6 +29,7 @@ from mapreduce_rust_spark.functions.vectors import (
     cosine_similarity,
     l2_norm,
 )
+from mapreduce_rust_spark.indexes import session_index
 from mapreduce_rust_spark.sources.tables import fan_out, load_table
 
 ORACLE: dict[str, str] = {}
@@ -280,24 +281,20 @@ def ivf_assign(
 
 
 def ivf_assign_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (per session) inverted file over the embeddings table:
+    """Session index of the inverted file over the embeddings table:
     (vec_id, embedding, cid) under the deterministic first-``IVF_K``
     coarse quantizer. Five slugs (``ann_topk_ivf``, ``ann_topk_ivfpq``,
     ``ann_nprobe_curve``, ``dedup_semantic_cluster``,
     ``ann_ivf_balance_audit``) probe the SAME index — production
     materializes the IVF build once and every query serves from it;
-    recomputing the broadcast-assignment pass per slug was pure waste
-    (r09 verdict ask #6). Same ``_memoized`` localCheckpoint machinery
-    as the dedup signature index."""
-    from mapreduce_rust_spark.operators.dedup import _SIG_INDEX, _memoized
-
+    recomputing the broadcast-assignment pass per slug was pure waste."""
     def build() -> DataFrame:
         emb = fan_out(load_table(spark, sf_dir, "embeddings"))
         return ivf_assign(
             emb, ivf_centroids(emb, "vec_id", "embedding"), "vec_id", "embedding"
         )
 
-    return _memoized(_SIG_INDEX, (sf_dir, f"ivf-assign-k{IVF_K}"), build)
+    return session_index(spark, sf_dir, f"ivf-assign-k{IVF_K}", build)
 
 
 def topk_ivf(
@@ -782,19 +779,15 @@ KMEANS_ITERS = 3  # unrolled Lloyd rounds (oracle chains the same CTEs)
 
 
 def kmeans_centroids_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (per session) deterministic Lloyd centroid table over
+    """Session index of the deterministic Lloyd centroid table over
     the embeddings dataset — ``embedding_kmeans`` and
     ``embedding_cluster_purity`` describe the SAME clustering by
     construction, so recomputing the full assign→update trace per slug
-    doubled the most expensive stage for nothing (r09 verdict ask #2:
-    cluster_purity reproducibly ran 7.5 s vs 2.9 s best because of
-    exactly this). The trace is deterministic, so memoizing the
-    materialized centroids cannot change any value the oracle checks."""
-    from mapreduce_rust_spark.operators.dedup import _SIG_INDEX, _memoized
-
-    return _memoized(
-        _SIG_INDEX,
-        (sf_dir, f"kmeans-k{KMEANS_K}-i{KMEANS_ITERS}"),
+    doubled the most expensive stage for nothing. The trace is
+    deterministic, so sharing the materialized centroids cannot change
+    any value the oracle checks."""
+    return session_index(
+        spark, sf_dir, f"kmeans-k{KMEANS_K}-i{KMEANS_ITERS}",
         lambda: kmeans_centroids(
             load_table(spark, sf_dir, "embeddings"),
             "vec_id",
@@ -1575,15 +1568,12 @@ def _pq_assignments(emb: DataFrame) -> DataFrame:
 
 
 def pq_assignments_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (per session) PQ code table (vec_id, j, cid, d) over
+    """Session index of the PQ code table (vec_id, j, cid, d) over
     the embeddings dataset — the encode report, the ADC search, and
     the IVF+PQ composite all consume the SAME deterministic codebook
-    assignment; one build serves all three (r09 verdict ask #6)."""
-    from mapreduce_rust_spark.operators.dedup import _SIG_INDEX, _memoized
-
-    return _memoized(
-        _SIG_INDEX,
-        (sf_dir, f"pq-assign-m{PQ_M}-k{PQ_K}"),
+    assignment; one build serves all three."""
+    return session_index(
+        spark, sf_dir, f"pq-assign-m{PQ_M}-k{PQ_K}",
         lambda: _pq_assignments(load_table(spark, sf_dir, "embeddings")),
     )
 

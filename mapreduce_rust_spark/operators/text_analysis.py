@@ -24,6 +24,7 @@ from mapreduce_rust_spark.functions.text import (
     tokenize_whitespace,
     word_shingles,
 )
+from mapreduce_rust_spark.indexes import session_index
 from mapreduce_rust_spark.sources.tables import fan_out, load_table
 
 ORACLE: dict[str, str] = {}
@@ -1543,19 +1544,14 @@ KN_TOPN = 20
 
 
 def kn_bigram_model_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized (per session) interpolated-KN bigram model table for
+    """Session index of the interpolated-KN bigram model table for
     the documents dataset — the shared LM build of
     ``text_kneser_ney_bigram`` and ``text_bigram_perplexity`` (each
     re-ran the full corpus bigram count + marginals; the table itself
     is vocab²-bounded, so the checkpoint is model-sized, not
-    corpus-sized). Same ``_memoized`` localCheckpoint machinery as the
-    dedup-family indexes (guide §5)."""
-    from mapreduce_rust_spark.operators.dedup import _SIG_INDEX, _memoized
-    from mapreduce_rust_spark.sources.tables import fan_out, load_table
-
-    return _memoized(
-        _SIG_INDEX,
-        (sf_dir, "kn-bigram-model"),
+    corpus-sized)."""
+    return session_index(
+        spark, sf_dir, "kn-bigram-model",
         lambda: _kn_bigram_model(
             _doc_bigrams(fan_out(load_table(spark, sf_dir, "documents"))).select(
                 "w1", "w2"

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_rust_spark.indexes import file_stamp
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -34,7 +36,7 @@ TABLE_NAMES = (
 BROADCAST_SAFE = ("region", "nation", "supplier")
 
 
-# (session id, sf_dir, table, file mtime) → analyzed DataFrame. A
+# (session id, sf_dir, table, file stamp) → analyzed DataFrame. A
 # load_table call costs ~0.2 s of py4j/footer/conf round-trips; queries
 # load 1-4 tables each, so across a 140-query suite the repeated loads
 # are a double-digit-seconds tax. DataFrames are immutable logical
@@ -43,18 +45,11 @@ BROADCAST_SAFE = ("region", "nation", "supplier")
 # never sees another session's plans; the id is collision-safe ONLY
 # because each cached DataFrame holds a reference to its session
 # (df.sparkSession), pinning the object alive for the entry's lifetime
-# — an invariant any future value type must preserve. The file mtime
-# in the key invalidates stale plans when a host regenerates the
-# parquet under the same path (testdata IS regenerated between driver
-# rounds); clear_table_cache() is the explicit big hammer.
-_TABLE_CACHE: dict[tuple[int, str, str, float], DataFrame] = {}
+# — an invariant any future value type must preserve. The file stamp
+# in the key (``indexes.file_stamp``, which also invalidates session
+# indexes) drops stale plans when a host rewrites the parquet in place.
+_TABLE_CACHE: dict[tuple, DataFrame] = {}
 
-
-def clear_table_cache() -> None:
-    """Drop every memoized table plan (and fan_out derivation) — for
-    hosts that regenerate testdata in place mid-session."""
-    _TABLE_CACHE.clear()
-    _FANOUT_CACHE.clear()
 # (id(frame), target) → (frame, fanned-out frame): fan_out's partition
 # probe (df.rdd → plan-to-RDD translation) and repartition-plan build
 # cost ~0.25 s of py4j per call and are pure functions of the input
@@ -116,11 +111,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_session_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        mtime = os.stat(path).st_mtime
-    except OSError:
-        mtime = -1.0  # let the Spark reader raise its own error
-    key = (id(spark), sf_dir, name, mtime)
+    # a missing file stamps None; the Spark reader raises its own error
+    key = (id(spark), sf_dir, name, file_stamp(path))
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached

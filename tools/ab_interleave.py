@@ -5,12 +5,12 @@ noise episodes and JIT warmup hit both sides equally. Paired min/med
 comparison is then meaningful on a noisy host where consecutive
 sessions can differ 3x.
 
-Module isolation (r10 ADVICE fix): each side owns a private
+Module isolation: each side owns a private
 sys.modules universe that is swapped in around its calls, with its
 tree root FIRST on sys.path (and the other side's root absent) for
 the duration — so old-side functions that lazily import at call time
 resolve against the OLD tree, not the working tree, and the two
-sides' session memos (dedup._SIG_INDEX etc.) stay separate.
+sides' session indexes (the ``indexes`` registry) stay separate.
 
     python tools/ab_interleave.py [-nN] [-rREF] slug [slug ...]
 """

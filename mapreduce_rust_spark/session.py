@@ -15,14 +15,23 @@ engine-level knobs we own are the session configs below, chosen for the
 * ``ignoreCorruptFiles`` mirrors the reference's skip-unreadable-input
   semantics (``worker.rs:109-115``: bad files are warned and skipped,
   not fatal).
+* Every Python process Spark starts gets a cheap import-cache reset.
+  ``spark.executorEnv.PYTHONPATH`` holds the package root and
+  ``workerboot/``, whose ``sitecustomize.py`` installs the reset when
+  the interpreter starts. That reaches the UDF daemon and also the
+  Python datasource planner and writer runners, which Spark always
+  starts as stock ``pyspark.daemon``. Under the stock reset each task
+  re-reads ``pyspark.zip``'s directory once per importer, up to 15
+  times, on Python < 3.12 (40-70 ms); a no-op ``mapInArrow`` over 32
+  partitions took 1.32 s with it and 0.53 s without (median of 8,
+  4-core x86 host).
 * ``spark.python.daemon.module`` = ``mapreduce_rust_spark.pydaemon``:
-  every Python worker forks from a daemon whose per-task import-cache
-  reset skips unchanged zip archives. Under stock ``pyspark.daemon``
-  each task re-reads ``pyspark.zip``'s directory once per importer, up
-  to 15 times, on Python < 3.12 (about 40 ms); a no-op ``mapInArrow``
-  over 32 partitions took 1.32 s with it and 0.53 s without (median of
-  8, 4-core x86 host). ``spark.executorEnv.PYTHONPATH`` makes the
-  daemon importable whatever the driver's working directory.
+  UDF, Arrow/pandas UDF and datasource read and write tasks fork from a
+  daemon that has pyarrow, pandas and numpy loaded and GC-frozen, so
+  the workers share those pages and skip them in their per-task
+  ``gc.collect()``.
+* A bare session (``MRS_PLAIN_SESSION=1`` in the correctness tools)
+  sets none of this: its workers get neither the hook nor the daemon.
 """
 
 from __future__ import annotations
@@ -36,6 +45,7 @@ from pyspark.sql import SparkSession
 
 _SCRATCH_ROOT: str | None = None
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_BOOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "workerboot")
 
 
 def scratch_dir(prefix: str = "mrs_") -> str:
@@ -90,8 +100,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "mapreduce_rust_spark.pydaemon")
         # the daemon (and any engine function a worker unpickles) must
-        # import from wherever the driver was started
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        # import from wherever the driver was started; workerboot's
+        # sitecustomize runs in every Python process Spark starts
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join((_PACKAGE_ROOT, _WORKER_BOOT)))
     )
     if extra_conf:
         for k, v in extra_conf.items():

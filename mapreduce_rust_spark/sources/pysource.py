@@ -25,6 +25,7 @@ reference hardcoded as ``n_map``.
 
 from __future__ import annotations
 
+import functools
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,18 +37,34 @@ N_ROWS = 4096
 N_PARTS = 8
 
 _REGISTER_LOCK = threading.Lock()
+# registering function -> the session it last registered its sources in
+_REGISTERED: dict[str, SparkSession] = {}
 
 
-def _register(spark: SparkSession, *sources) -> None:
-    """Register Python data sources, one thread at a time: Spark checks
-    a name's first registration against every source it can resolve
-    and then stores it, so two threads registering one name at once
-    can fail with DATA_SOURCE_ALREADY_EXISTS."""
-    with _REGISTER_LOCK:
-        for source in sources:
-            spark.dataSource.register(source)
+def _once_per_session(register):
+    """Run ``register(spark)`` once per session, one thread at a time.
+
+    Registering a name again replaces the source and logs a WARN, so
+    each query re-registering would log one per source. The check is
+    keyed on the calling session, as ``indexes.session_index`` is: a new
+    session has its own, empty source registry. The lock matters because
+    Spark checks a name's first registration against every source it can
+    resolve and then stores it, so two threads registering one name at
+    once can fail with DATA_SOURCE_ALREADY_EXISTS. ``register`` defines
+    its classes inside itself, so they pickle by value and a bare
+    session's workers need not import this package."""
+
+    @functools.wraps(register)
+    def once(spark: SparkSession) -> None:
+        with _REGISTER_LOCK:
+            if _REGISTERED.get(register.__name__) is not spark:
+                register(spark)
+                _REGISTERED[register.__name__] = spark
+
+    return once
 
 
+@_once_per_session
 def _register_source(spark: SparkSession) -> None:
     """Register ``mrs_range`` and its filter-pushdown twin
     ``mrs_range_pushdown``; both split the range into the same
@@ -148,9 +165,8 @@ def _register_source(spark: SparkSession) -> None:
         def reader(self, schema):
             return _PushdownReader()
 
-    # re-registration under the same name is an overwrite, so this is
-    # idempotent across queries in one session
-    _register(spark, DeterministicRangeSource, PushdownRangeSource)
+    spark.dataSource.register(DeterministicRangeSource)
+    spark.dataSource.register(PushdownRangeSource)
 
 
 def _bucket_totals(df: DataFrame, *extra) -> DataFrame:
@@ -223,6 +239,7 @@ FROM src GROUP BY bucket ORDER BY bucket
 """
 
 
+@_once_per_session
 def _register_sink(spark: SparkSession) -> None:
     from pyspark.sql.datasource import (
         DataSource,
@@ -292,13 +309,7 @@ def _register_sink(spark: SparkSession) -> None:
         def writer(self, schema, overwrite):
             return _JsonDirWriter(self.options)
 
-    _register(spark, JsonDirSink)
-    # a write resolves the sink's name through the calling thread's
-    # active JVM session, which threads other than the one that built
-    # the session lack (DATA_SOURCE_NOT_FOUND from a thread pool)
-    spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
-        spark._jsparkSession
-    )
+    spark.dataSource.register(JsonDirSink)
 
 
 def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,6 +323,12 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register_source(spark)
     _register_sink(spark)
+    # a write resolves the sink's name through the calling thread's
+    # active JVM session, which threads other than the one that built
+    # the session lack (DATA_SOURCE_NOT_FOUND from a thread pool)
+    spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
+        spark._jsparkSession
+    )
     agg = _bucket_totals(spark.read.format("mrs_range").load())
     out = scratch_dir(prefix="mrs_pysink_")
     agg.write.format("mrs_jsonsink").option("path", out).mode("append").save()
@@ -325,6 +342,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["sink_python_datasource"] = ORACLE["source_python_datasource"]
 
 
+@_once_per_session
 def _register_stream_source(spark: SparkSession) -> None:
     from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
@@ -370,9 +388,10 @@ def _register_stream_source(spark: SparkSession) -> None:
         def simpleStreamReader(self, schema):
             return _RangeStreamReader()
 
-    _register(spark, DeterministicRangeStream)
+    spark.dataSource.register(DeterministicRangeStream)
 
 
+@_once_per_session
 def _register_partitioned_stream_source(spark: SparkSession) -> None:
     from pyspark.sql.datasource import (
         DataSource,
@@ -442,7 +461,7 @@ def _register_partitioned_stream_source(spark: SparkSession) -> None:
         def streamReader(self, schema):
             return _PartitionedRangeStreamReader()
 
-    _register(spark, PartitionedRangeStream)
+    spark.dataSource.register(PartitionedRangeStream)
 
 
 def source_python_stream_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:

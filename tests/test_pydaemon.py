@@ -1,9 +1,12 @@
-"""The engine Python daemon (``mapreduce_rust_spark.pydaemon``): its
-import-cache reset, and every worker forking from it."""
+"""The Python processes Spark starts for an engine session: the
+import-cache reset every one of them installs at start-up
+(``workerboot/sitecustomize.py``), and the preloaded UDF daemon
+(``mapreduce_rust_spark.pydaemon``)."""
 
 from __future__ import annotations
 
 import importlib
+import importlib.util
 import json
 import os
 import subprocess
@@ -14,9 +17,22 @@ import zipimport
 
 import pytest
 
-from mapreduce_rust_spark import pydaemon
-
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BOOT_DIR = os.path.join(ROOT, "mapreduce_rust_spark", "workerboot")
+
+
+def _load_boot():
+    """The boot hook as a plain module: under any name but
+    ``sitecustomize`` it only defines its functions."""
+    spec = importlib.util.spec_from_file_location(
+        "mrs_workerboot", os.path.join(BOOT_DIR, "sitecustomize.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+boot = _load_boot()
 
 
 def _write_zip(path, members: dict[str, str]) -> None:
@@ -45,7 +61,7 @@ def zip_on_path(tmp_path, monkeypatch):
 )
 def test_reset_skips_unchanged_zip_and_rereads_rewritten(zip_on_path, monkeypatch):
     monkeypatch.setattr(
-        zipimport.zipimporter, "invalidate_caches", pydaemon.invalidate_caches
+        zipimport.zipimporter, "invalidate_caches", boot.invalidate_caches
     )
     assert importlib.import_module("mrs_zpkg.a").X == 1
     # two importers of the one archive: its root and the package directory
@@ -73,37 +89,104 @@ def test_reset_skips_unchanged_zip_and_rereads_rewritten(zip_on_path, monkeypatc
     assert len({id(imp._files) for imp in importers}) == 1
 
 
+def test_boot_hook_installs_reset_and_runs_shadowed_hook(tmp_path):
+    """A bare interpreter with the boot directory on ``PYTHONPATH``
+    installs the reset at start-up, still runs a ``sitecustomize``
+    further along the path, and imports nothing of the engine or
+    pyspark."""
+    other = tmp_path / "other"
+    other.mkdir()
+    (other / "sitecustomize.py").write_text("import sys\nsys.mrs_other_hook_ran = True\n")
+    code = textwrap.dedent(
+        """
+        import json, sys, zipimport
+        print(json.dumps({
+            "patched": zipimport.zipimporter.invalidate_caches.__module__ == "sitecustomize",
+            "hook": sys.modules["sitecustomize"].__file__,
+            "other": getattr(sys, "mrs_other_hook_ran", False),
+            "loaded": [m for m in sys.modules if m.split(".")[0] in ("mapreduce_rust_spark", "pyspark")],
+        }))
+        """
+    )
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join((BOOT_DIR, str(other)))}
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert proc.returncode == 0, proc.stderr
+    got = json.loads(proc.stdout)
+    assert got["patched"] or sys.version_info >= (3, 12)
+    assert got["hook"] == os.path.join(BOOT_DIR, "sitecustomize.py")
+    assert got["other"]
+    assert got["loaded"] == []
+
+
 _OUTSIDE_SCRIPT = textwrap.dedent(
     """
     import json, sys
     sys.path[:0] = [ROOT, ROOT + "/tools"]
     from check_correctness import check_one, duck_con
     from mapreduce_rust_spark import get_spark
+    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+    def state():
+        # what this Python process had set up before any task code ran
+        import gc, sys, zipimport
+        hook = sys.modules.get("sitecustomize")
+        return {
+            "hook": getattr(hook, "__file__", None),
+            "patched": zipimport.zipimporter.invalidate_caches
+            is getattr(hook, "invalidate_caches", None),
+            "daemon": sys.modules["__main__"].__spec__.name,
+            "pandas": "pandas" in sys.modules,
+            "frozen": gc.get_freeze_count(),
+        }
 
     def probe(batches):
-        import sys, zipimport
         import pyarrow as pa
+        got = state()
         for _ in batches:
             pass
-        mod = sys.modules.get("mapreduce_rust_spark.pydaemon")
-        patched = (
-            mod is not None
-            and zipimport.zipimporter.invalidate_caches is mod.invalidate_caches
-        )
-        yield pa.RecordBatch.from_pydict(
-            {"daemon": [mod is not None], "patched": [patched]}
-        )
+        yield pa.RecordBatch.from_pydict({"state": [json.dumps(got)]})
+
+    class PlanProbeReader(DataSourceReader):
+        def partitions(self):
+            # runs in the planner process (plan_data_source_read)
+            return [InputPartition(json.dumps(state()))]
+
+        def read(self, partition):
+            yield (partition.value, json.dumps(state()))
+
+    class PlanProbe(DataSource):
+        @classmethod
+        def name(cls):
+            return "mrs_plan_probe"
+
+        def schema(self):
+            return "planner string, reader string"
+
+        def reader(self, schema):
+            return PlanProbeReader()
 
     spark = get_spark("pydaemon_outside")
-    rows = spark.range(8, numPartitions=2).mapInArrow(
-        probe, "daemon boolean, patched boolean"
-    ).collect()
+    tasks = spark.range(8, numPartitions=2).mapInArrow(probe, "state string").collect()
+    spark.dataSource.register(PlanProbe)
+    (planned,) = spark.read.format("mrs_plan_probe").load().collect()
     con = duck_con(SF_DIR)
-    ok, problem = check_one(spark, con, "source_python_datasource", SF_DIR)
+    oracle = {
+        slug: check_one(spark, con, slug, SF_DIR)
+        for slug in ("source_python_datasource", "sink_python_datasource")
+    }
     print("RESULT " + json.dumps({
         "conf": spark.sparkContext.getConf().get("spark.python.daemon.module"),
-        "tasks": [r.asDict() for r in rows],
-        "oracle": [ok, problem],
+        "tasks": [json.loads(r.state) for r in tasks],
+        "planner": json.loads(planned.planner),
+        "reader": json.loads(planned.reader),
+        "oracle": oracle,
     }))
     spark.stop()
     """
@@ -112,9 +195,11 @@ _OUTSIDE_SCRIPT = textwrap.dedent(
 
 def test_workers_fork_from_engine_daemon_outside_repo(tmp_path, sf_dir):
     """Started from a directory outside the checkout, with the checkout
-    only on the driver's own ``sys.path``: every task runs in a worker
-    forked from the engine daemon, and a Python datasource slug still
-    matches its oracle."""
+    only on the driver's own ``sys.path``: every Python process,
+    including the datasource planner Spark starts as stock
+    ``pyspark.daemon``, runs the checkout's boot hook; every task runs
+    in a worker forked from the preloaded engine daemon; and the Python
+    datasource reader and writer slugs still match their oracles."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
     script = f"ROOT = {ROOT!r}\nSF_DIR = {sf_dir!r}\n" + _OUTSIDE_SCRIPT
@@ -131,7 +216,12 @@ def test_workers_fork_from_engine_daemon_outside_repo(tmp_path, sf_dir):
     got = json.loads(lines[-1][len("RESULT "):])
     assert got["conf"] == "mapreduce_rust_spark.pydaemon"
     assert len(got["tasks"]) == 2
-    for task in got["tasks"]:
-        assert task["daemon"]
-        assert task["patched"] or sys.version_info >= (3, 12)
-    assert got["oracle"][0], got["oracle"][1]
+    hook = os.path.join(BOOT_DIR, "sitecustomize.py")
+    for state in [*got["tasks"], got["planner"], got["reader"]]:
+        assert state["hook"] == hook
+        assert state["patched"] or sys.version_info >= (3, 12)
+    for state in [*got["tasks"], got["reader"]]:
+        assert state["daemon"] == "mapreduce_rust_spark.pydaemon"
+        assert state["pandas"] and state["frozen"] > 0
+    for slug, (ok, problem) in got["oracle"].items():
+        assert ok, (slug, problem)

@@ -378,6 +378,35 @@ def test_python_datasource_partition_planning(spark):
     assert df.rdd.getNumPartitions() == N_PARTS
 
 
+def test_python_datasource_registers_once_per_session(spark, monkeypatch):
+    """Repeated queries in one session register the range sources once
+    (registering again replaces them and logs a WARN); a new session
+    gets its own registration and can read them."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from mapreduce_rust_spark.sources.pysource import N_PARTS, _register_source
+
+    names: list[str] = []
+    register = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration,
+        "register",
+        lambda self, ds: names.append(ds.name()) or register(self, ds),
+    )
+    active = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    a, b = spark.newSession(), spark.newSession()
+    try:
+        for session in (a, a, b, b):
+            # Spark checks a first registration against the thread's
+            # active session, which already holds the fixture's sources
+            active.setActiveSession(session._jsparkSession)
+            _register_source(session)
+        assert names == ["mrs_range", "mrs_range_pushdown"] * 2
+        assert b.read.format("mrs_range").load().rdd.getNumPartitions() == N_PARTS
+    finally:
+        active.setActiveSession(spark._jsparkSession)
+
+
 def test_late_data_audit_no_global_sort(spark, sf_dir):
     """The distributed prefix-max must not fall back to a range-
     partitioned global window: the only windows are per-arrival-hour

@@ -12,6 +12,12 @@ the duration — so old-side functions that lazily import at call time
 resolve against the OLD tree, not the working tree, and the two
 sides' session indexes (the ``indexes`` registry) stay separate.
 
+Both sides share one session: its confs, its JVM and the Python daemons
+its workers fork from. So this tool cannot A/B a session-level change
+(a ``get_spark`` conf, the worker boot hook, the UDF daemon); the old
+side would run with the new session. For those, alternate whole
+``perfbench/run.py`` runs of the two trees.
+
     python tools/ab_interleave.py [-nN] [-rREF] slug [slug ...]
 """
 

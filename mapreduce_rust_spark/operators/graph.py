@@ -1,5 +1,4 @@
-"""Iterative graph operators: connected components for duplicate
-clustering.
+"""Iterative graph operators over the near-duplicate graph.
 
 A dedup pipeline's pair output (``dedup_minhash_lsh``,
 ``dedup_simhash``, …) is an edge list; choosing survivors requires the
@@ -17,22 +16,86 @@ data operation is distributed — no collect of nodes or edges. At
 GraphFrames use the same alternation); convergence is checked with a
 cheap aggregate per round rather than materializing differences.
 
-The oracle is DuckDB's recursive-CTE transitive closure — exact same
-semantics, tractable at oracle scale (sf0.01), infeasible at cluster
-scale (closure blowup), which is precisely why the engine runs label
-propagation instead.
+Every slug here runs over one graph, and each shared piece of it is
+built in one place:
+
+1. the candidate pairs — MinHash-LSH pairs at threshold 0.5, each
+   unordered pair once with ``d1 < d2`` — are the ``pairs-k3-t0.5``
+   session index (:func:`_pairs`);
+2. the undirected edge list, both orientations of the pairs, is the
+   ``edges-0.5`` session index (:func:`_graph_edges`). The public
+   operators take any edge list, so each builds its own with
+   :func:`_undirected`, the one helper for both orientations;
+3. the connected components are the ``components-0.5`` session index
+   (:func:`dedup_components`);
+4. the label-propagation communities are the ``lpa-r2-0.5`` session
+   index (:func:`lpa_labels`).
+
+The DuckDB oracles share the same pieces as SQL: ``_GRAPH_SQL`` is the
+``pairs``/``edges`` CTE prelude, :func:`_lpa_sql` unrolls the LPA
+rounds, and :func:`_components_oracle` is the recursive-CTE transitive
+closure — exact same semantics as the components loop, tractable at
+oracle scale (sf0.01), infeasible at cluster scale (closure blowup),
+which is precisely why the engine runs label propagation instead.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql
 from mapreduce_rust_spark.indexes import session_index
-
+from mapreduce_rust_spark.operators.dedup import _minhash_oracle, candidate_pairs_index
+from mapreduce_rust_spark.sources.tables import load_table
 
 ORACLE: dict[str, str] = {}
+
+# The near-dup graph as DuckDB CTEs: the candidate pairs and both
+# orientations of them. MATERIALIZED because most oracles read them
+# several times; otherwise DuckDB re-inlines the whole MinHash
+# signature derivation per reference (and spills to disk at sf1).
+_GRAPH_SQL = f"""pairs AS MATERIALIZED (
+  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
+),
+edges AS MATERIALIZED (
+  SELECT d1 AS a, d2 AS b FROM pairs
+  UNION
+  SELECT d2 AS a, d1 AS b FROM pairs
+)"""
+
+
+def _pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The near-dup graph: the LSH candidate pairs ``(d1, d2, est_sim)``
+    at threshold 0.5, a session index."""
+    return candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
+
+
+def _undirected(edges: DataFrame, src: str = "d1", dst: str = "d2") -> DataFrame:
+    """Both orientations of ``edges``, once each, as ``(a, b)``.
+
+    The lazy ``localCheckpoint`` truncates the lineage of the loops
+    that read the edges every round; without it every round
+    re-analyzes a plan that grows with the iteration count (measured
+    33 s → 12 s for the components loop at sf0.1). Lazy, because the
+    first job that reads the edges caches them as a side effect, so
+    the checkpoint costs no job of its own. On a multi-node cluster,
+    write to reliable storage instead of executor-local blocks."""
+    return (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The near-dup graph's undirected edge list ``(a, b)``, a session
+    index read by the slugs that take degrees or neighbors."""
+    return session_index(
+        spark, sf_dir, "edges-0.5", lambda: _undirected(_pairs(spark, sf_dir))
+    )
 
 
 def connected_components(
@@ -49,33 +112,16 @@ def connected_components(
     changed (checked via a single count of improved labels). Labels
     monotonically decrease and are bounded below, so termination is
     guaranteed; rounds ≈ graph diameter ≤ ``max_iter``."""
-    # undirected: both orientations, once. localCheckpoint (not mere
-    # persist) is load-bearing in iterative loops: it TRUNCATES the
-    # logical plan, otherwise every round re-analyzes a lineage tree
-    # that grows with the iteration count and driver-side planning
-    # time swamps the job (measured 33 s → 12 s at sf0.1, with the
-    # loop itself dropping to ~0.4 s/round). On a multi-node cluster
-    # use rdd.checkpoint()/write-to-parquet for fault-tolerant
-    # truncation instead of executor-local blocks.
-    # LAZY checkpoints (eager=False) fold materialization into the
-    # convergence aggregate: each round runs exactly ONE job — the
-    # Σcomp collect — which computes the propagated labels, caches the
-    # truncation blocks as a side effect, and returns the convergence
-    # scalar. The eager form cost 2 blocking driver round-trips per
-    # round (checkpoint job + collect job); halving them halves the
-    # loop's sensitivity to driver/scheduler latency (the r04 bench
-    # outlier was exactly this latency under host load).
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges, src, dst)
     # identity-label init FUSED with the first propagation round: a
     # node's round-1 label is min(self, neighbors), which one grouped
     # aggregation over the edge list computes directly — saves the
     # separate distinct-nodes shuffle, one full join+groupBy round,
     # and one convergence job (A/B measured ~20% off the loop).
+    # LAZY checkpoints fold materialization into the convergence
+    # aggregate: each round runs exactly ONE job — the Σcomp collect —
+    # which computes the propagated labels, caches the truncation
+    # blocks as a side effect, and returns the convergence scalar.
     labels = (
         e.groupBy(F.col("a").alias("node"))
         .agg(F.least(F.min("b"), F.min("a")).alias("comp"))
@@ -109,32 +155,18 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id (the canonical survivor). Downstream: keep rows where
     node == comp, drop the rest.
 
-    A session index like the signature index: the component labeling
-    is the third shared dedup artifact (survivor selection, cluster
-    stats, and reporting all consume it), so the LSH pair generation +
-    propagation loop runs once per dataset, not once per consuming
-    query."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    def build():
-        pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
-        return connected_components(pairs, "d1", "d2").select("node", "comp")
-
-    return session_index(spark, sf_dir, "components-0.5", build)
+    A session index: survivor selection, cluster stats, the clustering
+    agreement audit and reporting all consume it, so the propagation
+    loop runs once per dataset, not once per consuming query."""
+    return session_index(
+        spark, sf_dir, "components-0.5",
+        lambda: connected_components(_pairs(spark, sf_dir)).select("node", "comp"),
+    )
 
 
 def _components_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
     return f"""
-WITH RECURSIVE pairs AS (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
-),
-edges AS (
-  SELECT d1 AS a, d2 AS b FROM pairs
-  UNION
-  SELECT d2 AS a, d1 AS b FROM pairs
-),
+WITH RECURSIVE {_GRAPH_SQL},
 reach(node, lbl) AS (
   SELECT a, a FROM edges
   UNION
@@ -152,13 +184,9 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected component of near-dup pairs, keep the LONGEST document
     (min doc_id on ties) instead of the arbitrary min-id — the policy
     real pipelines want ("drop the truncated copies"). Composes the
-    components loop with a per-component ranking window; the window
+    components index with a per-component ranking window; the window
     shuffles only the clustered docs (a tiny fraction of the corpus),
     never the full table."""
-    from pyspark.sql import Window as W
-
-    from mapreduce_rust_spark.sources.tables import load_table
-
     comps = dedup_components(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     members = comps.join(docs, comps["node"] == docs["doc_id"]).select(
@@ -177,8 +205,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _keep_best_oracle() -> str:
-    return f"""
+ORACLE["dedup_keep_best"] = f"""
 WITH comps AS ({_components_oracle()}),
 ranked AS (
   SELECT c.comp, c.node, d.n_chars,
@@ -192,9 +219,6 @@ SELECT comp,
        count(*) AS n_members
 FROM ranked GROUP BY comp ORDER BY comp
 """
-
-
-ORACLE["dedup_keep_best"] = _keep_best_oracle()
 
 LPA_ROUNDS = 2  # fixed, synchronous — keeps the oracle unrollable
 
@@ -210,19 +234,12 @@ def label_propagation(
     dense dup clusters doesn't merge them.
 
     A FIXED round count (not convergence) keeps the operator
-    deterministic AND value-oracle-able: the DuckDB twin unrolls the
-    same {LPA_ROUNDS} rounds as CTEs (the ``embedding_kmeans``
-    trick). Each round is one join + one (node, label) count + one
-    argmax window partitioned by node — all keyed shuffles on node
-    ids, no global ordering anywhere."""
-    from pyspark.sql import Window as W
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    deterministic AND value-oracle-able: the DuckDB twin
+    (:func:`_lpa_sql`) unrolls the same rounds as CTEs (the
+    ``embedding_kmeans`` trick). Each round is one join + one (node,
+    label) count + one argmax window partitioned by node — all keyed
+    shuffles on node ids, no global ordering anywhere."""
+    und = _undirected(edges, src, dst)
     labels = und.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -241,29 +258,25 @@ def label_propagation(
     return labels
 
 
-def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community sizes after {LPA_ROUNDS} LPA rounds over the LSH
-    near-dup candidate graph — the community-detection view of the
-    dup graph (vs ``dedup_components``' reachability view). Output is
-    one row per surviving community label."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
-    final = label_propagation(pairs, "d1", "d2")
-    return (
-        final.groupBy(F.col("lbl").alias("label"))
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-        .orderBy("label")
+def lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(node, lbl)``: the LPA communities of the near-dup graph after
+    ``LPA_ROUNDS`` rounds. A session index like
+    :func:`dedup_components`: the community size, modularity,
+    conductance and clustering-agreement slugs all read it, so the
+    rounds run once per dataset."""
+    return session_index(
+        spark, sf_dir, f"lpa-r{LPA_ROUNDS}-0.5",
+        lambda: label_propagation(_pairs(spark, sf_dir), "d1", "d2"),
     )
 
 
-def _lpa_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
-    rounds = []
-    prev = "l0"
+def _lpa_sql() -> str:
+    """CTEs ``l0``, ``r1`` … and ``labels(node, lbl)``: the rounds of
+    :func:`label_propagation` unrolled over ``edges``."""
+    ctes = ["l0 AS (SELECT DISTINCT a AS node, a AS lbl FROM edges)"]
     for i in range(1, LPA_ROUNDS + 1):
-        rounds.append(
+        prev = f"r{i - 1}" if i > 1 else "l0"
+        ctes.append(
             f"""r{i} AS (
   SELECT node, lbl FROM (
     SELECT e.b AS node, l.lbl, count(*) AS c,
@@ -274,27 +287,64 @@ def _lpa_oracle() -> str:
   ) WHERE rn = 1
 )"""
         )
-        prev = f"r{i}"
-    # MATERIALIZED (kcore-oracle precedent): each round references
-    # edges again — without it DuckDB re-inlines the whole MinHash
-    # signature derivation per round and spills to disk at sf1
-    return f"""
-WITH pairs AS MATERIALIZED (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
-),
-edges AS MATERIALIZED (
-  SELECT d1 AS a, d2 AS b FROM pairs
-  UNION
-  SELECT d2 AS a, d1 AS b FROM pairs
-),
-l0 AS (SELECT DISTINCT a AS node, a AS lbl FROM edges),
-{", ".join(rounds)}
+    ctes.append(f"labels AS MATERIALIZED (SELECT node, lbl FROM r{LPA_ROUNDS})")
+    return ",\n".join(ctes)
+
+
+def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Community sizes after ``LPA_ROUNDS`` LPA rounds over the LSH
+    near-dup candidate graph — the community-detection view of the
+    dup graph (vs ``dedup_components``' reachability view). Output is
+    one row per surviving community label."""
+    return (
+        lpa_labels(spark, sf_dir)
+        .groupBy(F.col("lbl").alias("label"))
+        .agg(F.count(F.lit(1)).alias("n_nodes"))
+        .orderBy("label")
+    )
+
+
+ORACLE["graph_label_propagation"] = f"""
+WITH {_GRAPH_SQL},
+{_lpa_sql()}
 SELECT lbl AS label, count(*) AS n_nodes
-FROM {prev} GROUP BY 1 ORDER BY 1
+FROM labels GROUP BY 1 ORDER BY 1
 """
 
 
-ORACLE["graph_label_propagation"] = _lpa_oracle()
+def _communities(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, int]:
+    """What the community-quality readouts share: every undirected edge
+    tagged with its endpoints' LPA communities ``(ca, cb)``, each
+    community's volume (total degree) and 2m, the undirected edge
+    count (each edge counted both ways)."""
+    labels = lpa_labels(spark, sf_dir)
+    und = _graph_edges(spark, sf_dir)
+    m2 = und.count()
+    la = labels.select(F.col("node").alias("a"), F.col("lbl").alias("ca"))
+    lb = labels.select(F.col("node").alias("b"), F.col("lbl").alias("cb"))
+    deg = und.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
+    vol = (
+        labels.join(deg, "node")
+        .groupBy(F.col("lbl").alias("community"))
+        .agg(F.sum("deg").alias("vol"))
+    )
+    return und.join(la, "a").join(lb, "b"), vol, m2
+
+
+# The oracle twin of _communities, after _GRAPH_SQL and _lpa_sql().
+_COMMUNITIES_SQL = """m2 AS (SELECT count(*) AS m2 FROM edges),
+tagged AS (
+  SELECT la.lbl AS ca, lb.lbl AS cb
+  FROM edges e
+  JOIN labels la ON la.node = e.a
+  JOIN labels lb ON lb.node = e.b
+),
+deg AS (SELECT a, count(*) AS deg FROM edges GROUP BY 1),
+vol AS (
+  SELECT l.lbl AS community, sum(d.deg) AS vol
+  FROM labels l JOIN deg d ON d.a = l.node
+  GROUP BY 1
+)"""
 
 
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,114 +353,49 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q = Σ_c (e_c/m − (D_c/2m)²), e_c = intra-community edges, D_c =
     total degree in c; Q ≈ 0 means no better than random, Q ≳ 0.3
     means solid structure. The quality gate one runs before trusting
-    community-based dedup survivors. Plan: labels come from the same
-    fixed-round LPA (shared semantics with graph_label_propagation);
+    community-based dedup survivors. Plan: labels come from the shared
+    LPA index (same communities as graph_label_propagation);
     classifying every edge as intra/inter is two node-keyed label
-    joins; the Σ runs over the |communities|-row frame. One global Q
-    row plus the per-community decomposition, all bounded
-    aggregates."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
-    labels = label_propagation(pairs, "d1", "d2")
-    und = (
-        pairs.select(F.col("d1").alias("a"), F.col("d2").alias("b"))
-        .union(pairs.select(F.col("d2").alias("a"), F.col("d1").alias("b")))
-        .distinct()
-    )
-    m2 = und.count()  # 2m: each undirected edge counted both ways
-    la = labels.select(F.col("node").alias("a"), F.col("lbl").alias("ca"))
-    lb = labels.select(F.col("node").alias("b"), F.col("lbl").alias("cb"))
-    tagged = und.join(la, "a").join(lb, "b")
+    joins; the Σ runs over the |communities|-row frame. The
+    per-community decomposition, all bounded aggregates."""
+    tagged, vol, m2 = _communities(spark, sf_dir)
     intra = (
         tagged.filter(F.col("ca") == F.col("cb"))
         .groupBy(F.col("ca").alias("community"))
         .agg((F.count(F.lit(1)) / 2).cast("bigint").alias("e_in"))
     )
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    dtot = (
-        labels.join(deg.withColumnRenamed("a", "node"), "node")
-        .groupBy(F.col("lbl").alias("community"))
-        .agg(F.sum("deg").alias("d_tot"))
-    )
-    per_c = dtot.join(intra, "community", "left").select(
-        "community",
-        F.coalesce("e_in", F.lit(0)).alias("e_in"),
-        "d_tot",
-        (
-            F.coalesce("e_in", F.lit(0)) / F.lit(m2 / 2.0)
-            - (F.col("d_tot") / F.lit(float(m2)))
-            * (F.col("d_tot") / F.lit(float(m2)))
-        ).alias("q_c"),
-    )
-    return per_c.select(
-        "community",
-        "e_in",
-        "d_tot",
-        fround("q_c", 6).alias("q_contrib"),
-    ).orderBy("community")
-
-
-def _modularity_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
-    rounds = []
-    prev = "l0"
-    for i in range(1, LPA_ROUNDS + 1):
-        rounds.append(
-            f"""r{i} AS (
-  SELECT node, lbl FROM (
-    SELECT e.b AS node, l.lbl, count(*) AS c,
-           row_number() OVER (PARTITION BY e.b
-                              ORDER BY count(*) DESC, l.lbl) AS rn
-    FROM edges e JOIN {prev} l ON l.node = e.a
-    GROUP BY e.b, l.lbl
-  ) WHERE rn = 1
-)"""
+    e_in = F.coalesce("e_in", F.lit(0))
+    share = F.col("vol") / F.lit(float(m2))
+    return (
+        vol.join(intra, "community", "left")
+        .select(
+            "community",
+            e_in.alias("e_in"),
+            F.col("vol").alias("d_tot"),
+            fround(e_in / F.lit(m2 / 2.0) - share * share, 6).alias("q_contrib"),
         )
-        prev = f"r{i}"
-    return f"""
-WITH pairs AS MATERIALIZED (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
-),
-edges AS MATERIALIZED (
-  SELECT d1 AS a, d2 AS b FROM pairs
-  UNION
-  SELECT d2 AS a, d1 AS b FROM pairs
-),
-l0 AS (SELECT DISTINCT a AS node, a AS lbl FROM edges),
-{", ".join(rounds)},
-labels AS MATERIALIZED (SELECT node, lbl FROM {prev}),
-m2 AS (SELECT count(*) AS m2 FROM edges),
-tagged AS (
-  SELECT la.lbl AS ca, lb.lbl AS cb
-  FROM edges e
-  JOIN labels la ON la.node = e.a
-  JOIN labels lb ON lb.node = e.b
-),
+        .orderBy("community")
+    )
+
+
+ORACLE["graph_modularity"] = f"""
+WITH {_GRAPH_SQL},
+{_lpa_sql()},
+{_COMMUNITIES_SQL},
 intra AS (
   SELECT ca AS community, CAST(count(*) / 2 AS BIGINT) AS e_in
   FROM tagged WHERE ca = cb GROUP BY 1
-),
-deg AS (SELECT a, count(*) AS deg FROM edges GROUP BY 1),
-dtot AS (
-  SELECT l.lbl AS community, sum(d.deg) AS d_tot
-  FROM labels l JOIN deg d ON d.a = l.node
-  GROUP BY 1
 )
-SELECT d.community,
+SELECT v.community,
        CAST(coalesce(i.e_in, 0) AS BIGINT) AS e_in,
-       CAST(d.d_tot AS BIGINT) AS d_tot,
-       {fround_sql("coalesce(i.e_in, 0) / (any_value(m2.m2) / 2.0) - (d.d_tot / CAST(any_value(m2.m2) AS DOUBLE)) * (d.d_tot / CAST(any_value(m2.m2) AS DOUBLE))", 6)} AS q_contrib
-FROM dtot d
-LEFT JOIN intra i ON i.community = d.community
+       CAST(v.vol AS BIGINT) AS d_tot,
+       {fround_sql("coalesce(i.e_in, 0) / (any_value(m2.m2) / 2.0) - (v.vol / CAST(any_value(m2.m2) AS DOUBLE)) * (v.vol / CAST(any_value(m2.m2) AS DOUBLE))", 6)} AS q_contrib
+FROM vol v
+LEFT JOIN intra i ON i.community = v.community
 CROSS JOIN m2
-GROUP BY d.community, i.e_in, d.d_tot
-ORDER BY d.community
+GROUP BY v.community, i.e_in, v.vol
+ORDER BY v.community
 """
-
-
-ORACLE["graph_modularity"] = _modularity_oracle()
 
 
 def graph_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -419,34 +404,15 @@ def graph_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(vol(c), 2m - vol(c)), where cut = edge endpoints leaving the
     community and vol = total degree inside. Low phi = a community
     that barely touches the rest of the dup graph (safe to dedup as a
-    unit); phi near 1 = an LSH-bridge artifact. Same shared
-    artifacts as ``graph_modularity`` (memoized candidate pairs +
-    fixed-round LPA labels), two node-keyed label joins, and the
-    readout runs on the |communities|-row frame — nothing here scales
-    beyond the edge list."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
-    labels = label_propagation(pairs, "d1", "d2")
-    und = (
-        pairs.select(F.col("d1").alias("a"), F.col("d2").alias("b"))
-        .union(pairs.select(F.col("d2").alias("a"), F.col("d1").alias("b")))
-        .distinct()
-    )
-    m2 = und.count()  # 2m, both directions
-    la = labels.select(F.col("node").alias("a"), F.col("lbl").alias("ca"))
-    lb = labels.select(F.col("node").alias("b"), F.col("lbl").alias("cb"))
-    tagged = und.join(la, "a").join(lb, "b")
+    unit); phi near 1 = an LSH-bridge artifact. Same shared inputs as
+    ``graph_modularity`` (:func:`_communities`); the readout runs on
+    the |communities|-row frame — nothing here scales beyond the edge
+    list."""
+    tagged, vol, m2 = _communities(spark, sf_dir)
     cut = (
         tagged.filter(F.col("ca") != F.col("cb"))
         .groupBy(F.col("ca").alias("community"))
         .agg(F.count(F.lit(1)).alias("cut"))
-    )
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    vol = (
-        labels.join(deg.withColumnRenamed("a", "node"), "node")
-        .groupBy(F.col("lbl").alias("community"))
-        .agg(F.sum("deg").alias("vol"))
     )
     phi = F.coalesce("cut", F.lit(0)) / F.greatest(
         F.least(F.col("vol").cast("double"), F.lit(float(m2)) - F.col("vol")),
@@ -464,52 +430,13 @@ def graph_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _conductance_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
-    rounds = []
-    prev = "l0"
-    for i in range(1, LPA_ROUNDS + 1):
-        rounds.append(
-            f"""r{i} AS (
-  SELECT node, lbl FROM (
-    SELECT e.b AS node, l.lbl, count(*) AS c,
-           row_number() OVER (PARTITION BY e.b
-                              ORDER BY count(*) DESC, l.lbl) AS rn
-    FROM edges e JOIN {prev} l ON l.node = e.a
-    GROUP BY e.b, l.lbl
-  ) WHERE rn = 1
-)"""
-        )
-        prev = f"r{i}"
-    return f"""
-WITH pairs AS MATERIALIZED (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
-),
-edges AS MATERIALIZED (
-  SELECT d1 AS a, d2 AS b FROM pairs
-  UNION
-  SELECT d2 AS a, d1 AS b FROM pairs
-),
-l0 AS (SELECT DISTINCT a AS node, a AS lbl FROM edges),
-{", ".join(rounds)},
-labels AS MATERIALIZED (SELECT node, lbl FROM {prev}),
-m2 AS (SELECT count(*) AS m2 FROM edges),
-tagged AS (
-  SELECT la.lbl AS ca, lb.lbl AS cb
-  FROM edges e
-  JOIN labels la ON la.node = e.a
-  JOIN labels lb ON lb.node = e.b
-),
+ORACLE["graph_conductance"] = f"""
+WITH {_GRAPH_SQL},
+{_lpa_sql()},
+{_COMMUNITIES_SQL},
 cut AS (
   SELECT ca AS community, CAST(count(*) AS BIGINT) AS cut
   FROM tagged WHERE ca <> cb GROUP BY 1
-),
-deg AS (SELECT a, count(*) AS deg FROM edges GROUP BY 1),
-vol AS (
-  SELECT l.lbl AS community, sum(d.deg) AS vol
-  FROM labels l JOIN deg d ON d.a = l.node
-  GROUP BY 1
 )
 SELECT v.community,
        CAST(v.vol AS BIGINT) AS vol,
@@ -523,9 +450,6 @@ ORDER BY v.community
 """
 
 
-ORACLE["graph_conductance"] = _conductance_oracle()
-
-
 def graph_clustering_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adjusted Rand Index between the dup graph's TWO clusterings —
     connected components (reachability) vs label propagation
@@ -533,21 +457,14 @@ def graph_clustering_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping strategies agree, and where". ARI = (Σ_ij C(n_ij,2) −
     E)/(½(Σ_i C(a_i,2)+Σ_j C(b_j,2)) − E), E the chance-agreement
     term — 1.0 means identical partitions, ≈0 means chance. Both
-    labelings come from fixed-depth unrolls (the oracle replays
-    them); the contingency table is one (comp, lbl) aggregation
-    bounded by cluster counts, and every C(n,2) is plain arithmetic.
-    When LPA splits a weakly-bridged component the ARI drops — the
-    signal to re-examine those bridge edges before merging
+    labelings are session indexes (``dedup_components``,
+    :func:`lpa_labels`); the contingency table is one (comp, lbl)
+    aggregation bounded by cluster counts, and every C(n,2) is plain
+    arithmetic. When LPA splits a weakly-bridged component the ARI
+    drops — the signal to re-examine those bridge edges before merging
     survivors."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
-    comp = connected_components(pairs, "d1", "d2").select(
-        "node", F.col("comp").alias("ca")
-    )
-    lpa = label_propagation(pairs, "d1", "d2").select(
-        "node", F.col("lbl").alias("cb")
-    )
+    comp = dedup_components(spark, sf_dir).select("node", F.col("comp").alias("ca"))
+    lpa = lpa_labels(spark, sf_dir).select("node", F.col("lbl").alias("cb"))
     j = comp.join(lpa, "node")
 
     def c2(col):
@@ -577,45 +494,14 @@ def graph_clustering_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ari_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
-    lpa_rounds = []
-    prev = "l0"
-    for i in range(1, LPA_ROUNDS + 1):
-        lpa_rounds.append(
-            f"""r{i} AS (
-  SELECT node, lbl FROM (
-    SELECT e.b AS node, l.lbl, count(*) AS c,
-           row_number() OVER (PARTITION BY e.b
-                              ORDER BY count(*) DESC, l.lbl) AS rn
-    FROM edges e JOIN {prev} l ON l.node = e.a
-    GROUP BY e.b, l.lbl
-  ) WHERE rn = 1
-)"""
-        )
-        prev = f"r{i}"
-    return f"""
-WITH RECURSIVE pairs AS MATERIALIZED (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
+ORACLE["graph_clustering_agreement"] = f"""
+WITH comps AS MATERIALIZED ({_components_oracle()}),
+{_GRAPH_SQL},
+{_lpa_sql()},
+j AS (
+  SELECT c.node, c.comp AS ca, l.lbl AS cb
+  FROM comps c JOIN labels l USING (node)
 ),
-edges AS MATERIALIZED (
-  SELECT d1 AS a, d2 AS b FROM pairs
-  UNION
-  SELECT d2 AS a, d1 AS b FROM pairs
-),
-reach AS (
-  SELECT a AS node, a AS lbl FROM edges
-  UNION
-  SELECT e.b, r.lbl FROM reach r JOIN edges e ON e.a = r.node
-),
-comp AS MATERIALIZED (
-  SELECT node, min(lbl) AS ca FROM reach GROUP BY 1
-),
-l0 AS (SELECT DISTINCT a AS node, a AS lbl FROM edges),
-{", ".join(lpa_rounds)},
-lpa AS MATERIALIZED (SELECT node, lbl AS cb FROM {prev}),
-j AS (SELECT c.node, c.ca, l.cb FROM comp c JOIN lpa l USING (node)),
 nij AS (
   SELECT sum(n * (n - 1) / 2.0) AS s
   FROM (SELECT ca, cb, count(*) AS n FROM j GROUP BY 1, 2)
@@ -640,9 +526,6 @@ FROM tot CROSS JOIN nij CROSS JOIN sa_ CROSS JOIN sb_
 """
 
 
-ORACLE["graph_clustering_agreement"] = _ari_oracle()
-
-
 def pagerank_fixed(
     edges: DataFrame, src: str, dst: str, iters: int = 3, d: float = 0.85
 ) -> DataFrame:
@@ -654,12 +537,7 @@ def pagerank_fixed(
     connected_components-style driver loop. Each iteration is one
     join + one aggregation on the node key; the rank/degree frame is
     tiny relative to the input that produced the edges."""
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _undirected(edges, src, dst)
     deg = e.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     n = deg.count()
     ranks = deg.select("a", F.lit(1.0 / n).alias("r"))
@@ -681,60 +559,29 @@ def pagerank_fixed(
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-iteration PageRank over the MinHash-LSH near-duplicate graph
     — ranks the "hub" documents of each duplicate cluster."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
-    pr = pagerank_fixed(pairs, "d1", "d2", iters=3, d=0.85)
+    pr = pagerank_fixed(_pairs(spark, sf_dir), "d1", "d2", iters=3, d=0.85)
     return pr.select(
         "node", F.expr("floor(round(r, 10) * 1000000) / 1000000").alias("rank")
     ).orderBy(F.col("rank").desc(), "node")
 
 
-def _pagerank_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
-    return f"""
-WITH pairs AS (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
-),
-edges AS (
-  SELECT d1 AS a, d2 AS b FROM pairs
-  UNION
-  SELECT d2 AS a, d1 AS b FROM pairs
-),
+ORACLE["graph_pagerank"] = f"""
+WITH {_GRAPH_SQL},
 deg AS (SELECT a, count(*) AS deg FROM edges GROUP BY a),
 n AS (SELECT count(*) AS n FROM deg),
 r0 AS (SELECT a, 1.0 / n AS r FROM deg CROSS JOIN n),
-r1 AS (
+{",".join(f'''
+r{i} AS (
   SELECT d.a, 0.15 / any_value(n.n) + 0.85 * coalesce(sum(r.r / dd.deg), 0) AS r
   FROM deg d CROSS JOIN n
   LEFT JOIN edges e ON e.b = d.a
-  LEFT JOIN r0 r ON r.a = e.a
+  LEFT JOIN r{i - 1} r ON r.a = e.a
   LEFT JOIN deg dd ON dd.a = e.a
   GROUP BY d.a
-),
-r2 AS (
-  SELECT d.a, 0.15 / any_value(n.n) + 0.85 * coalesce(sum(r.r / dd.deg), 0) AS r
-  FROM deg d CROSS JOIN n
-  LEFT JOIN edges e ON e.b = d.a
-  LEFT JOIN r1 r ON r.a = e.a
-  LEFT JOIN deg dd ON dd.a = e.a
-  GROUP BY d.a
-),
-r3 AS (
-  SELECT d.a, 0.15 / any_value(n.n) + 0.85 * coalesce(sum(r.r / dd.deg), 0) AS r
-  FROM deg d CROSS JOIN n
-  LEFT JOIN edges e ON e.b = d.a
-  LEFT JOIN r2 r ON r.a = e.a
-  LEFT JOIN deg dd ON dd.a = e.a
-  GROUP BY d.a
-)
+)''' for i in range(1, 4))}
 SELECT a AS node, floor(round(r, 10) * 1000000) / 1000000 AS rank
 FROM r3 ORDER BY rank DESC, node
 """
-
-
-ORACLE["graph_pagerank"] = _pagerank_oracle()
 
 
 def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -745,9 +592,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     in. Reuses the memoized candidate pairs; two tiny aggregations
     (per-node degree, then degree → node count), both with key spaces
     orders of magnitude below the corpus."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
+    pairs = _pairs(spark, sf_dir)
     nodes = pairs.select(F.col("d1").alias("node")).unionAll(
         pairs.select(F.col("d2").alias("node"))
     )
@@ -759,22 +604,14 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _degree_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
-    return f"""
-WITH pairs AS (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
-),
+ORACLE["graph_degree_distribution"] = f"""
+WITH {_GRAPH_SQL},
 nodes AS (
   SELECT d1 AS node FROM pairs UNION ALL SELECT d2 FROM pairs
 ),
 deg AS (SELECT node, count(*) AS degree FROM nodes GROUP BY 1)
 SELECT degree, count(*) AS n_nodes FROM deg GROUP BY 1 ORDER BY 1
 """
-
-
-ORACLE["graph_degree_distribution"] = _degree_oracle()
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -814,19 +651,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     up here while the component census still sees one undifferentiated
     blob. Reuses the memoized candidate pairs; the joins run over the
     edge list (orders of magnitude smaller than the corpus)."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
-    return triangle_count(pairs.select("d1", "d2")).orderBy("node")
+    return triangle_count(_pairs(spark, sf_dir).select("d1", "d2")).orderBy("node")
 
 
-def _triangle_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
-    return f"""
-WITH pairs AS (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
-),
+ORACLE["graph_triangle_count"] = f"""
+WITH {_GRAPH_SQL},
 tri AS (
   SELECT e1.d1 AS a, e1.d2 AS b, e2.d2 AS c
   FROM pairs e1
@@ -841,8 +670,6 @@ nodes AS (
 SELECT node, count(*) AS n_triangles FROM nodes GROUP BY 1 ORDER BY 1
 """
 
-
-ORACLE["graph_triangle_count"] = _triangle_oracle()
 
 def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster SIZE DISTRIBUTION: how many near-dup clusters
@@ -865,8 +692,7 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cluster_sizes_oracle() -> str:
-    return f"""
+ORACLE["dedup_cluster_sizes"] = f"""
 WITH comps AS ({_components_oracle()})
 SELECT cluster_size, count(*) AS n_clusters,
        CAST(cluster_size * count(*) AS BIGINT) AS n_docs_covered
@@ -875,7 +701,22 @@ GROUP BY cluster_size ORDER BY cluster_size
 """
 
 
-ORACLE["dedup_cluster_sizes"] = _cluster_sizes_oracle()
+def _common_neighbors(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(pairs, deg, common)`` for the link-prediction scores: the
+    candidate pairs, every node's degree in the undirected graph, and
+    one ``(d1, d2, w)`` row per common neighbor ``w`` of a
+    candidate pair, the pair's own endpoints excluded."""
+    pairs = _pairs(spark, sf_dir).select("d1", "d2")
+    und = _graph_edges(spark, sf_dir)
+    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+    common = (
+        pairs.join(und.select(F.col("a").alias("d1"), F.col("b").alias("w")), "d1")
+        .join(und.select(F.col("a").alias("d2"), F.col("b").alias("w")), ["d2", "w"])
+        .filter((F.col("w") != F.col("d1")) & (F.col("w") != F.col("d2")))
+    )
+    return pairs, deg, common
 
 
 def graph_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -893,50 +734,21 @@ def graph_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every candidate pair is itself an edge, so the excluded-other
     degree is deg-1 exactly; all-integer arithmetic until the final
     ratio."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3).select(
-        "d1", "d2"
-    )
-    und = pairs.select(F.col("d1").alias("a"), F.col("d2").alias("n")).union(
-        pairs.select(F.col("d2").alias("a"), F.col("d1").alias("n"))
-    )
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    e1 = und.select(F.col("a").alias("d1"), F.col("n").alias("n1"))
-    e2 = und.select(F.col("a").alias("d2"), F.col("n").alias("n2"))
-    common = (
-        pairs.join(e1, "d1")
-        .join(e2, "d2")
-        .filter(
-            (F.col("n1") == F.col("n2"))
-            & (F.col("n1") != F.col("d1"))
-            & (F.col("n1") != F.col("d2"))
-        )
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("cn"))
-    )
+    pairs, deg, common = _common_neighbors(spark, sf_dir)
+    cn = common.groupBy("d1", "d2").agg(F.count(F.lit(1)).alias("cn"))
     da = deg.select(F.col("a").alias("d1"), (F.col("deg") - 1).alias("deg1"))
     db = deg.select(F.col("a").alias("d2"), (F.col("deg") - 1).alias("deg2"))
+    n_common = F.coalesce("cn", F.lit(0))
+    union = F.col("deg1") + F.col("deg2") - n_common
     out = (
-        pairs.join(common, ["d1", "d2"], "left")
+        pairs.join(cn, ["d1", "d2"], "left")
         .join(da, "d1")
         .join(db, "d2")
         .select(
             "d1",
             "d2",
-            F.coalesce("cn", F.lit(0)).alias("common_neighbors"),
-            (F.col("deg1") + F.col("deg2") - F.coalesce("cn", F.lit(0))).alias(
-                "_union"
-            ),
-        )
-        .select(
-            "d1",
-            "d2",
-            "common_neighbors",
-            F.when(
-                F.col("_union") > 0,
-                fround(F.col("common_neighbors") / F.col("_union"), 6),
-            )
+            n_common.alias("common_neighbors"),
+            F.when(union > 0, fround(n_common / union, 6))
             .otherwise(F.lit(0.0))
             .alias("jaccard"),
         )
@@ -946,25 +758,15 @@ def graph_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(100)
 
 
-def _node_jaccard_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
-    return f"""
-WITH pairs AS (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
-),
-und AS (
-  SELECT d1 AS a, d2 AS n FROM pairs
-  UNION ALL
-  SELECT d2 AS a, d1 AS n FROM pairs
-),
-deg AS (SELECT a, count(*) AS deg FROM und GROUP BY 1),
+ORACLE["graph_node_jaccard"] = f"""
+WITH {_GRAPH_SQL},
+deg AS (SELECT a, count(*) AS deg FROM edges GROUP BY 1),
 common AS (
   SELECT p.d1, p.d2, count(*) AS cn
   FROM pairs p
-  JOIN und e1 ON e1.a = p.d1
-  JOIN und e2 ON e2.a = p.d2 AND e2.n = e1.n
-  WHERE e1.n != p.d1 AND e1.n != p.d2
+  JOIN edges e1 ON e1.a = p.d1
+  JOIN edges e2 ON e2.a = p.d2 AND e2.b = e1.b
+  WHERE e1.b != p.d1 AND e1.b != p.d2
   GROUP BY 1, 2
 )
 SELECT p.d1, p.d2,
@@ -981,9 +783,6 @@ LIMIT 100
 """
 
 
-ORACLE["graph_node_jaccard"] = _node_jaccard_oracle()
-
-
 KCORE_K = 2
 KCORE_ROUNDS = 4
 
@@ -998,12 +797,7 @@ def kcore_peel(edges: DataFrame, src: str, dst: str, k: int, rounds: int) -> Dat
     fixed-round output equals the true k-core there. Each round is
     one degree aggregation + one semi-join pair — all keyed on node
     ids, no driver data."""
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges, src, dst)
     for _ in range(rounds):
         alive = (
             e.groupBy("a")
@@ -1030,20 +824,13 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     out; a genuinely replicated document family survives). Standard
     community-detection preprocessing; reuses the memoized LSH pair
     list like the components loop."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
-    return kcore_peel(pairs, "d1", "d2", KCORE_K, KCORE_ROUNDS)
+    return kcore_peel(_pairs(spark, sf_dir), "d1", "d2", KCORE_K, KCORE_ROUNDS)
 
 
 graph_kcore.__doc__ = graph_kcore.__doc__.format(k=KCORE_K)
 
-
 def _kcore_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
-    rounds = []
-    prev = "e0"
+    rounds, prev = [], "edges"
     for r in range(1, KCORE_ROUNDS + 1):
         rounds.append(f"""
 n{r} AS (
@@ -1056,15 +843,7 @@ e{r} AS MATERIALIZED (
 )""")
         prev = f"e{r}"
     return f"""
-WITH pairs AS MATERIALIZED (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
-),
-e0 AS MATERIALIZED (
-  SELECT d1 AS a, d2 AS b FROM pairs
-  UNION
-  SELECT d2 AS a, d1 AS b FROM pairs
-),
-{",".join(rounds)}
+WITH {_GRAPH_SQL},{",".join(rounds)}
 SELECT a AS node, count(*) AS core_deg
 FROM {prev}
 GROUP BY a
@@ -1085,44 +864,25 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is one degree aggregation plus two joins keyed on node ids,
     all edge-list-sized. corr is algebraic, so the final statistic is
     one partial-aggregatable pass."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
-    und = pairs.select(F.col("d1").alias("a"), F.col("d2").alias("b")).union(
-        pairs.select(F.col("d2").alias("a"), F.col("d1").alias("b"))
-    )
+    und = _graph_edges(spark, sf_dir)
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     da = deg.select(F.col("a"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("a").alias("b"), F.col("deg").alias("deg_b"))
-    edges = und.join(da, "a").join(db, "b")
-    return edges.agg(
+    return und.join(da, "a").join(db, "b").agg(
         (F.count(F.lit(1)) / 2).cast("bigint").alias("n_edges"),
         fround(F.corr("deg_a", "deg_b"), 4).alias("assortativity"),
     )
 
 
-def _assortativity_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
-    return f"""
-WITH pairs AS (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
-),
-und AS (
-  SELECT d1 AS a, d2 AS b FROM pairs
-  UNION ALL
-  SELECT d2 AS a, d1 AS b FROM pairs
-),
-deg AS (SELECT a, count(*) AS deg FROM und GROUP BY 1)
+ORACLE["graph_assortativity"] = f"""
+WITH {_GRAPH_SQL},
+deg AS (SELECT a, count(*) AS deg FROM edges GROUP BY 1)
 SELECT CAST(count(*) / 2 AS BIGINT) AS n_edges,
        {fround_sql('corr(da.deg, db.deg)', 4)} AS assortativity
-FROM und e
+FROM edges e
 JOIN deg da ON da.a = e.a
 JOIN deg db ON db.a = e.b
 """
-
-
-ORACLE["graph_assortativity"] = _assortativity_oracle()
 
 
 def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1139,26 +899,9 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches both endpoints), so ln(deg) > 0 always; excluded-endpoint
     correction is unnecessary for the NEIGHBOR's own degree (the
     weight is a property of w, not of the pair)."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3).select(
-        "d1", "d2"
-    )
-    und = pairs.select(F.col("d1").alias("a"), F.col("d2").alias("n")).union(
-        pairs.select(F.col("d2").alias("a"), F.col("d1").alias("n"))
-    )
-    deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    e1 = und.select(F.col("a").alias("d1"), F.col("n").alias("n1"))
-    e2 = und.select(F.col("a").alias("d2"), F.col("n").alias("n2"))
+    pairs, deg, common = _common_neighbors(spark, sf_dir)
     scored = (
-        pairs.join(e1, "d1")
-        .join(e2, "d2")
-        .filter(
-            (F.col("n1") == F.col("n2"))
-            & (F.col("n1") != F.col("d1"))
-            & (F.col("n1") != F.col("d2"))
-        )
-        .join(deg.select(F.col("a").alias("n1"), "deg"), "n1")
+        common.join(deg.select(F.col("a").alias("w"), "deg"), "w")
         .groupBy("d1", "d2")
         .agg(
             F.count(F.lit(1)).alias("common_neighbors"),
@@ -1180,28 +923,16 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _adamic_adar_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
-    # MATERIALIZED: pairs is referenced four times below — without it
-    # DuckDB re-inlines the full MinHash pipeline per reference.
-    return f"""
-WITH pairs AS MATERIALIZED (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
-),
-und AS (
-  SELECT d1 AS a, d2 AS n FROM pairs
-  UNION ALL
-  SELECT d2 AS a, d1 AS n FROM pairs
-),
-deg AS (SELECT a, count(*) AS deg FROM und GROUP BY 1),
+ORACLE["graph_adamic_adar"] = f"""
+WITH {_GRAPH_SQL},
+deg AS (SELECT a, count(*) AS deg FROM edges GROUP BY 1),
 scored AS (
   SELECT p.d1, p.d2, count(*) AS cn, sum(1.0 / ln(dw.deg)) AS aa
   FROM pairs p
-  JOIN und e1 ON e1.a = p.d1
-  JOIN und e2 ON e2.a = p.d2 AND e2.n = e1.n
-  JOIN deg dw ON dw.a = e1.n
-  WHERE e1.n != p.d1 AND e1.n != p.d2
+  JOIN edges e1 ON e1.a = p.d1
+  JOIN edges e2 ON e2.a = p.d2 AND e2.b = e1.b
+  JOIN deg dw ON dw.a = e1.b
+  WHERE e1.b != p.d1 AND e1.b != p.d2
   GROUP BY 1, 2
 )
 SELECT p.d1, p.d2,
@@ -1212,9 +943,6 @@ LEFT JOIN scored s ON s.d1 = p.d1 AND s.d2 = p.d2
 ORDER BY adamic_adar DESC, p.d1, p.d2
 LIMIT 100
 """
-
-
-ORACLE["graph_adamic_adar"] = _adamic_adar_oracle()
 
 
 EIGEN_ITERS = 3
@@ -1233,12 +961,7 @@ def eigenvector_centrality_fixed(
     weight — the "popular friends make you popular" centrality.
     Each iteration is one edge join + node aggregation + one scalar
     broadcast of the L1 norm; the score frame stays node-sized."""
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _undirected(edges, src, dst)
     nodes = e.select(F.col("a")).distinct()
     n = nodes.count()
     x = nodes.select("a", F.lit(1.0 / n).alias("x"))
@@ -1269,57 +992,34 @@ def eigenvector_centrality_fixed(
 def graph_eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-iteration L1 power method over the near-dup graph — surfaces
     the documents sitting at the dense core of duplicate clusters."""
-    from mapreduce_rust_spark.operators.dedup import candidate_pairs_index
-
-    pairs = candidate_pairs_index(spark, sf_dir, threshold=0.5, k=3)
-    ec = eigenvector_centrality_fixed(pairs, "d1", "d2", iters=EIGEN_ITERS)
+    ec = eigenvector_centrality_fixed(_pairs(spark, sf_dir), "d1", "d2", iters=EIGEN_ITERS)
     return ec.select(
         "node",
         F.expr("floor(round(x, 10) * 100000000) / 100000000").alias("centrality"),
     ).orderBy(F.col("centrality").desc(), "node")
 
 
-def _eigenvector_oracle() -> str:
-    from mapreduce_rust_spark.operators.dedup import _minhash_oracle
-
-    step = """
-{cur} AS (
-  SELECT nd.a, coalesce(sum(x.x), 0) AS s
-  FROM (SELECT DISTINCT a FROM edges) nd
-  LEFT JOIN edges e ON e.b = nd.a
-  LEFT JOIN {prev} x ON x.a = e.a
-  GROUP BY nd.a
-),
-{cur}n AS (
-  SELECT a, s / (SELECT sum(s) FROM {cur}) AS x FROM {cur}
-)"""
-    chain = ",".join(
-        step.format(cur=f"x{i}", prev=f"x{i - 1}n" if i > 1 else "x0")
-        for i in range(1, EIGEN_ITERS + 1)
-    )
-    # MATERIALIZED on edges: the unrolled power-iteration references it
-    # 2 + 2·iters times — without it DuckDB re-runs MinHash per use.
-    return f"""
-WITH pairs AS (
-  SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
-),
-edges AS MATERIALIZED (
-  SELECT d1 AS a, d2 AS b FROM pairs
-  UNION
-  SELECT d2 AS a, d1 AS b FROM pairs
-),
-x0 AS (
+ORACLE["graph_eigenvector_centrality"] = f"""
+WITH {_GRAPH_SQL},
+x0n AS (
   SELECT a, 1.0 / (SELECT count(DISTINCT a) FROM edges) AS x
   FROM (SELECT DISTINCT a FROM edges)
 ),
-{chain}
+{",".join(f'''
+x{i} AS (
+  SELECT nd.a, coalesce(sum(x.x), 0) AS s
+  FROM (SELECT DISTINCT a FROM edges) nd
+  LEFT JOIN edges e ON e.b = nd.a
+  LEFT JOIN x{i - 1}n x ON x.a = e.a
+  GROUP BY nd.a
+),
+x{i}n AS (
+  SELECT a, s / (SELECT sum(s) FROM x{i}) AS x FROM x{i}
+)''' for i in range(1, EIGEN_ITERS + 1))}
 SELECT a AS node,
        floor(round(x, 10) * 100000000) / 100000000 AS centrality
 FROM x{EIGEN_ITERS}n ORDER BY centrality DESC, node
 """
-
-
-ORACLE["graph_eigenvector_centrality"] = _eigenvector_oracle()
 
 
 QUERIES = {

@@ -333,7 +333,7 @@ def pref_rank_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     power iterations on the mean-1-scaled iterate (scale-invariant, so
     fixed-point rounding holds resolution at any corpus size). Same
     join shape as PageRank: transition table × rating frame per round."""
-    pstat = pair_index(spark, sf_dir).localCheckpoint(eager=False)
+    pstat = pair_index(spark, sf_dir)
     trans = pstat.select(
         "i",
         "j",
@@ -382,7 +382,7 @@ def pref_elo_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     logistic expectation E_ij = 1/(1+10^((r_j−r_i)/400)). Expectations
     within an epoch depend only on epoch-start ratings, so each epoch
     aggregates at the PAIR level — one join + one item-keyed agg."""
-    pstat = pair_index(spark, sf_dir).localCheckpoint(eager=False)
+    pstat = pair_index(spark, sf_dir)
     items = _item_stats(spark, sf_dir).localCheckpoint(eager=False)
     r = items.select("doc_id", F.lit(PREF_ELO_INIT).alias("r")).localCheckpoint(
         eager=False

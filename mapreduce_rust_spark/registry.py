@@ -9,6 +9,7 @@ reference-parity surface, plus the engine-extension families
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,68 +31,61 @@ def _register(queries: dict[str, QueryFn], oracles: dict[str, str]) -> None:
         _ORACLES[name] = sql.strip()
 
 
+# Every family module. None has an optional dependency, so an import
+# error propagates: a broken module must fail the registry, not drop
+# its slugs from queries() without a word.
+_FAMILIES: tuple[str, ...] = (
+    "plans.parity",
+    "plans.analytics",
+    "plans.advanced",
+    "plans.tpch",
+    "plans.sqlface",
+    "plans.timeseries",
+    "plans.pipeline",
+    "plans.behavior",
+    "plans.incremental",
+    "operators.dedup",
+    "streaming.queries",
+    "operators.similarity",
+    "operators.text_analysis",
+    "operators.cleaning",
+    "operators.corpus",
+    "operators.multimodal",
+    "operators.preference",
+    "operators.skew",
+    "operators.linkage",
+    "operators.graph",
+    "operators.profiling",
+    "sources.formats",
+    "sources.pysource",
+)
+
+
 def _load() -> None:
     if _QUERIES:
         return
-    from mapreduce_rust_spark.plans import (
-        advanced,
-        analytics,
-        behavior,
-        incremental,
-        parity,
-        pipeline,
-        sqlface,
-        timeseries,
-        tpch,
-    )
-
-    _register(parity.QUERIES, parity.ORACLE)
-    _register(analytics.QUERIES, analytics.ORACLE)
-    _register(advanced.QUERIES, advanced.ORACLE)
-    _register(tpch.QUERIES, tpch.ORACLE)
-    _register(sqlface.QUERIES, sqlface.ORACLE)
-    _register(timeseries.QUERIES, timeseries.ORACLE)
-    _register(pipeline.QUERIES, pipeline.ORACLE)
-    _register(behavior.QUERIES, behavior.ORACLE)
-    _register(incremental.QUERIES, incremental.ORACLE)
-    for mod_name in (
-        "mapreduce_rust_spark.operators.dedup",
-        "mapreduce_rust_spark.streaming.queries",
-        "mapreduce_rust_spark.operators.similarity",
-        "mapreduce_rust_spark.operators.text_analysis",
-        "mapreduce_rust_spark.operators.cleaning",
-        "mapreduce_rust_spark.operators.corpus",
-        "mapreduce_rust_spark.operators.multimodal",
-        "mapreduce_rust_spark.operators.preference",
-        "mapreduce_rust_spark.operators.skew",
-        "mapreduce_rust_spark.operators.linkage",
-        "mapreduce_rust_spark.operators.graph",
-        "mapreduce_rust_spark.operators.profiling",
-        "mapreduce_rust_spark.sources.formats",
-        "mapreduce_rust_spark.sources.pysource",
-    ):
-        try:
-            mod = __import__(mod_name, fromlist=["QUERIES", "ORACLE"])
-        except ImportError:
-            continue
-        _register(mod.QUERIES, getattr(mod, "ORACLE", {}))
+    try:
+        for name in _FAMILIES:
+            mod = importlib.import_module(f"mapreduce_rust_spark.{name}")
+            _register(mod.QUERIES, mod.ORACLE)
+    except BaseException:
+        # never leave a partial registry for the next call to serve
+        _QUERIES.clear()
+        _ORACLES.clear()
+        raise
 
 
 # The driver's correctness gate value-checks the FIRST 50 entries of
-# queries() in insertion order (rounds 1-10 evidence: CORRECTNESS_r
-# {01..10}.json contain exactly the first 50 positions). Slugs listed
-# here are surfaced into that window; everything else follows in
-# registration order. Rotate per round so every slug accumulates
-# oracle evidence: rounds 1-7 covered the parity/analytics/TPC-H
-# blocks, extension families, and each round's additions in turn;
-# round 8 the round-6/7 additions; round 9 all 29 round-8 additions +
-# round-1 backfill; round 10 the 9 round-9 additions + round-1/2
-# backfill; ROUND 11 (this list) = the 11 round-10 additions (their
-# FIRST driver evidence — they had none) + every slug whose PLAN this
-# optimization round changed (r10 ADVICE: touched slugs belong in the
-# round's committed correctness artifact) + oldest-evidence
-# (round-2, then round-3) backfill to fill the window.
+# queries() in insertion order. Slugs listed here are surfaced into
+# that window; everything else follows in registration order. The
+# window holds the slugs whose plan changed most recently first, then
+# slugs that never had an external oracle check, then the oldest ones.
 _PRIORITY: tuple[str, ...] = (
+    # --- graph slugs that now read the shared LPA labels ---
+    "graph_label_propagation",
+    "graph_modularity",
+    "graph_conductance",
+    "graph_clustering_agreement",
     # --- round-10 additions: first driver evidence ---
     "pipeline_prepare_corpus_v2",
     "features_quality_distill",
@@ -142,22 +136,28 @@ _PRIORITY: tuple[str, ...] = (
     "complex_types_suite",
     "corpus_shard_pack",
     "corr_matrix",
+)
+
+# Slugs queued immediately after the 50-slot window (positions 51+):
+# slugs displaced from the window first, then changed slugs that did
+# not fit, then the oldest-evidence backfill.
+_NEXT_WINDOW: tuple[str, ...] = (
+    # --- displaced from the window by the graph slugs above ---
     "customer_rfm",
     "dedup_exact_normalized",
     "dedup_keep_best",
     "dedup_prefix",
-)
-
-# Slugs queued immediately after the 50-slot window (positions 51+).
-# ROUND-12 ROTATION ORDER: any round-11 additions first (prepend new
-# slugs HERE as they land), then the remaining oldest-evidence
-# (round-3) backfill.
-_NEXT_WINDOW: tuple[str, ...] = (
+    # --- graph slugs on the shared undirected edge list ---
+    "graph_pagerank",
+    "graph_eigenvector_centrality",
+    "graph_node_jaccard",
+    "graph_adamic_adar",
+    "graph_assortativity",
+    # --- oldest-evidence backfill ---
     "dedup_span_exact",
     "embedding_centroids",
     "event_path_analysis",
     "full_outer_join",
-    "graph_pagerank",
     "knn_classify",
     "multimodal_frame_sample",
     "q11_important_parts",

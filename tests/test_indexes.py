@@ -87,20 +87,26 @@ def test_nested_build_is_charged_exclusively(spark, dataset):
     assert sum(charged.values()) <= wall
 
 
-def test_concurrent_callers_build_each_index_once(spark, dataset, monkeypatch):
-    """More threads than cores race for a nested build (components →
-    pairs → signatures) with a short switch interval."""
-    from mapreduce_rust_spark.operators.graph import dedup_components
-
-    stores: dict[str, int] = {}
+@pytest.fixture
+def stores(dataset, monkeypatch) -> dict[str, int]:
+    """tag -> number of index builds stored for ``dataset``."""
+    counts: dict[str, int] = {}
 
     class CountingDict(dict):
         def __setitem__(self, key, value):
             if key[0] == dataset:
-                stores[key[1]] = stores.get(key[1], 0) + 1
+                counts[key[1]] = counts.get(key[1], 0) + 1
             super().__setitem__(key, value)
 
     monkeypatch.setattr(indexes, "_INDEXES", CountingDict(indexes._INDEXES))
+    return counts
+
+
+def test_concurrent_callers_build_each_index_once(spark, dataset, stores):
+    """More threads than cores race for a nested build (components →
+    pairs → signatures) with a short switch interval."""
+    from mapreduce_rust_spark.operators.graph import dedup_components
+
     n = (os.cpu_count() or 4) + 2
     start = threading.Barrier(n, timeout=60)
 
@@ -118,3 +124,40 @@ def test_concurrent_callers_build_each_index_once(spark, dataset, monkeypatch):
         sys.setswitchinterval(interval)
     assert all(f is frames[0] for f in frames)
     assert stores == {"sig-k3": 1, "pairs-k3-t0.5": 1, "components-0.5": 1}
+
+
+def test_graph_slugs_share_components_and_lpa_labels(spark, dataset, stores, monkeypatch):
+    """The four LPA slugs run the LPA rounds once between them, and
+    the clustering agreement reads the components index instead of
+    rerunning the components loop."""
+    from mapreduce_rust_spark.operators import graph
+
+    graph.dedup_components(spark, dataset)
+
+    def rerun(*args, **kwargs):
+        raise AssertionError("components recomputed outside components-0.5")
+
+    lpa_runs = []
+    lpa = graph.label_propagation
+
+    def counted_lpa(*args, **kwargs):
+        lpa_runs.append(args)
+        return lpa(*args, **kwargs)
+
+    monkeypatch.setattr(graph, "connected_components", rerun)
+    monkeypatch.setattr(graph, "label_propagation", counted_lpa)
+    for slug in (
+        graph.graph_label_propagation,
+        graph.graph_modularity,
+        graph.graph_conductance,
+        graph.graph_clustering_agreement,
+    ):
+        assert slug(spark, dataset).collect()
+    assert len(lpa_runs) == 1
+    assert stores == {
+        "sig-k3": 1,
+        "pairs-k3-t0.5": 1,
+        "components-0.5": 1,
+        "edges-0.5": 1,
+        f"lpa-r{graph.LPA_ROUNDS}-0.5": 1,
+    }

@@ -48,6 +48,20 @@ def test_next_window_queue_directly_after_window():
     assert order[n : n + len(_NEXT_WINDOW)] == list(_NEXT_WINDOW)
 
 
+def test_unimportable_family_fails_the_registry(monkeypatch):
+    """A family module that cannot be imported must fail queries(), on
+    every call, instead of silently dropping its slugs."""
+    from mapreduce_rust_spark import registry
+
+    monkeypatch.setattr(registry, "_QUERIES", {})
+    monkeypatch.setattr(registry, "_ORACLES", {})
+    monkeypatch.setitem(sys.modules, "mapreduce_rust_spark.operators.graph", None)
+    for _ in range(2):
+        with pytest.raises(ImportError):
+            registry.queries()
+    assert registry._QUERIES == {} and registry._ORACLES == {}
+
+
 def _check_one(spark, sf_dir, duck, slug) -> list[str]:
     from mapreduce_rust_spark.registry import oracle_sql, queries
 

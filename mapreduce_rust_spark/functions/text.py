@@ -1,6 +1,17 @@
 """Text column expressions (pure ``pyspark.sql.functions`` — JVM-side,
 whole-stage-codegen'd; no Python in the hot path).
 
+This module owns the two primitives that make Spark and the DuckDB
+oracles agree, each as a Spark expression beside its SQL twin:
+
+* the 60-bit md5 hash — :func:`hash64` and :func:`hash64_sql`;
+* the ``[^a-z0-9]+`` text normalization — :func:`normalize_text` and
+  :func:`normalize_sql`.
+
+Engine code and every oracle take them from here; they are spelled
+nowhere else (``tests/test_wordcount.py`` checks both the parity of
+each pair and that no other module spells them out).
+
 ``tokenize_whitespace`` pins the reference's exact tokenizer semantics
 (``mr_app/src/client.rs:3-12``): split on whitespace runs, keep case,
 keep punctuation ("hello" and "hello," are distinct tokens), drop empty
@@ -23,6 +34,11 @@ def hash64(col: Column | str) -> Column:
     """Deterministic non-negative 60-bit integer hash of a string column."""
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
+
+
+def hash64_sql(expr: str) -> str:
+    """DuckDB twin of :func:`hash64` over the SQL string ``expr``."""
+    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
 
 
 def tokenize_whitespace(col: Column | str) -> Column:
@@ -56,6 +72,11 @@ def normalize_text(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.trim(F.regexp_replace(F.lower(c), r"[^a-z0-9]+", " "))
+
+
+def normalize_sql(expr: str) -> str:
+    """DuckDB twin of :func:`normalize_text` over the SQL string ``expr``."""
+    return f"trim(regexp_replace(lower({expr}), '[^a-z0-9]+', ' ', 'g'))"
 
 
 def word_shingles(col: Column | str, k: int = 3) -> Column:

@@ -30,7 +30,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql, single_partition
-from mapreduce_rust_spark.functions.text import tokenize_whitespace
+from mapreduce_rust_spark.functions.text import (
+    hash64,
+    hash64_sql,
+    normalize_sql,
+    tokenize_whitespace,
+)
 from mapreduce_rust_spark.indexes import session_index
 from mapreduce_rust_spark.sources.tables import fan_out, load_table
 
@@ -269,13 +274,13 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["decontaminate_ngram_overlap"] = """
+ORACLE["decontaminate_ngram_overlap"] = f"""
 WITH tok AS (
   SELECT doc_id, generate_subscripts(l, 1) AS pos, unnest(l) AS w
   FROM (
-    SELECT doc_id, string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS l
+    SELECT doc_id, string_split({normalize_sql('text')}, ' ') AS l
     FROM documents
-    WHERE trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) <> ''
+    WHERE {normalize_sql('text')} <> ''
   ) x
 ),
 spans AS (
@@ -423,11 +428,7 @@ def features_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
 
     def fold(key):
-        return (
-            F.conv(F.substring(F.md5(key.cast("string")), 1, 15), 16, 10)
-            .cast("bigint")
-            % KFOLDS
-        ).alias("fold")
+        return (hash64(key.cast("string")) % KFOLDS).alias("fold")
 
     cf = cust.select(
         fold(F.col("c_custkey")),
@@ -469,7 +470,7 @@ def features_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE["features_kfold_assign"] = f"""
 WITH cf AS (
-  SELECT ('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 15))::BIGINT
+  SELECT {hash64_sql('CAST(c_custkey AS VARCHAR)')}
            % {KFOLDS} AS fold,
          count(*) AS n_customers,
          {fround_sql("avg(CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END)", 4)}
@@ -477,7 +478,7 @@ WITH cf AS (
   FROM customer GROUP BY 1
 ),
 o AS (
-  SELECT ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15))::BIGINT
+  SELECT {hash64_sql('CAST(o_custkey AS VARCHAR)')}
            % {KFOLDS} AS fold,
          o_custkey, o_totalprice
   FROM orders
@@ -525,7 +526,7 @@ def features_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("feat")
     )
-    h = F.conv(F.substring(F.md5("feat"), 1, 15), 16, 10).cast("bigint")
+    h = hash64("feat")
     sign = F.when(
         F.conv(F.substring(F.md5(F.concat(F.lit("s"), F.col("feat"))), 1, 1), 16, 10)
         % 2
@@ -557,7 +558,7 @@ WITH feats AS (
   ]) AS feat
   FROM customer
 )
-SELECT ('0x' || substr(md5(feat), 1, 15))::BIGINT % {HASH_BUCKETS} AS bucket,
+SELECT {hash64_sql('feat')} % {HASH_BUCKETS} AS bucket,
        CAST(sum(CASE WHEN ('0x' || substr(md5('s' || feat), 1, 1))::BIGINT % 2 = 0
                      THEN 1 ELSE -1 END) AS BIGINT) AS signed_count,
        count(*) AS n_values,
@@ -712,11 +713,7 @@ def features_scaler_fit_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast 1-row parameter frame, one map-side transform of val
     — at 100 TB the scaler "model" is still one row."""
     cust = load_table(spark, sf_dir, "customer")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("split:"), F.col("c_custkey").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
+    h = hash64(F.concat(F.lit("split:"), F.col("c_custkey").cast("string")))
     tagged = cust.withColumn("is_train", (h % 1000 < 800).cast("int"))
     params = tagged.filter(F.col("is_train") == 1).agg(
         F.avg("c_acctbal").alias("mu"),
@@ -751,7 +748,7 @@ def features_scaler_fit_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["features_scaler_fit_apply"] = f"""
 WITH tagged AS (
   SELECT c_custkey, c_nationkey, c_acctbal,
-         CASE WHEN ('0x' || substr(md5('split:' || CAST(c_custkey AS VARCHAR)), 1, 15))::BIGINT
+         CASE WHEN {hash64_sql("'split:' || CAST(c_custkey AS VARCHAR)")}
                    % 1000 < 800 THEN 1 ELSE 0 END AS is_train
   FROM customer
 ),
@@ -1117,7 +1114,7 @@ def features_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "coverage"
         ),
         F.lit(1.0 - CONF_ALPHA).alias("target"),
-        # ADVICE r08: when ⌈(n_cal+1)(1−α)⌉ > n_cal the true split-
+        # When ⌈(n_cal+1)(1−α)⌉ > n_cal the true split-
         # conformal quantile is +∞ (infinite-width interval); capping k
         # at n_cal substitutes the max calibration score and silently
         # loses the coverage guarantee. Surface that substitution.
@@ -1502,7 +1499,7 @@ def corpus_decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("cid"), "bid")
         .distinct(),
     )
-    # broadcast guard (ADVICE r08): cand is data-dependent; count the
+    # broadcast guard: cand is data-dependent; count the
     # memoized frame (reused 2× below anyway) and only hint a driver
     # broadcast under the cap — above it AQE picks the join strategy
     _hint = (
@@ -1513,7 +1510,7 @@ def corpus_decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared with the whole dedup family) instead of a fresh
     # shingle_sets plan: ``sh`` is consumed FOUR times below (sz,
     # bench_sh, inter, scored) and each consumer re-ran the full
-    # explode+distinct pass — guide §5 reuse, r09 verdict ask #6
+    # explode+distinct pass (guide §5 reuse)
     sh = shingle_index(spark, sf_dir, k=3)
     sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     bench_sh = F.broadcast(
@@ -1568,7 +1565,6 @@ def _decon_minhash_oracle() -> str:
     from mapreduce_rust_spark.operators.dedup import (
         MINHASH_PRIME,
         ROWS_PER_BAND,
-        _h64_sql,
         _minhash_params,
         _SHINGLE_SQL,
     )
@@ -1578,7 +1574,7 @@ def _decon_minhash_oracle() -> str:
     )
     return f"""
 WITH ds AS ({_SHINGLE_SQL}),
-h AS (SELECT doc_id, {_h64_sql('s')} AS h FROM ds),
+h AS (SELECT doc_id, {hash64_sql('s')} AS h FROM ds),
 params(j, a, b) AS (VALUES {params}),
 sig AS MATERIALIZED (
   SELECT doc_id, j,
@@ -1626,7 +1622,7 @@ FROM best WHERE rk = 1 ORDER BY doc_id
 ORACLE["corpus_decontaminate_minhash"] = _decon_minhash_oracle()
 
 
-# --- quality-classifier distillation (r10) ---------------------------
+# --- quality-classifier distillation ---------------------------------
 #
 # The fastText-style step of the standard LLM curation funnel the
 # engine was missing: distill the EXPENSIVE rule-based quality gate
@@ -1898,18 +1894,18 @@ def _qc_oracle_prefix() -> str:
     and the unrolled b0..b{QC_ROUNDS} Newton rounds."""
     from mapreduce_rust_spark.operators.text_analysis import _quality_sql
 
-    featr = f"""
-  SELECT doc_id, ('0x' || substr(md5('tok=' || unnest(list_distinct(list_filter(
-    string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-    x -> x <> '')))), 1, 15))::BIGINT % {QC_BUCKETS} AS bucket
-  FROM documents
-  UNION
-  SELECT doc_id, {QC_BUCKETS} + ('0x' || substr(md5(unnest([
+    toks = f"list_distinct(list_filter(string_split({normalize_sql('text')}, ' '), x -> x <> ''))"
+    bands = """[
     'alphab=' || CAST(CAST(floor(length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))::DOUBLE / length(text) * 20) AS BIGINT) AS VARCHAR),
     'digitb=' || CAST(CAST(floor(length(regexp_replace(text, '[^0-9]', '', 'g'))::DOUBLE / length(text) * 20) AS BIGINT) AS VARCHAR),
     'mwlb=' || CAST(CAST(floor((length(text) - length(regexp_replace(text, '[^ \t\n]', '', 'g')))::DOUBLE / len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) * 4) AS BIGINT) AS VARCHAR),
     'ntokb=' || CAST(CAST(floor(len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) / 8) AS BIGINT) AS VARCHAR)
-  ])), 1, 15))::BIGINT % {QC_BUCKETS} AS bucket
+  ]"""
+    featr = f"""
+  SELECT doc_id, {hash64_sql(f"'tok=' || unnest({toks})")} % {QC_BUCKETS} AS bucket
+  FROM documents
+  UNION
+  SELECT doc_id, {QC_BUCKETS} + {hash64_sql(f"unnest({bands})")} % {QC_BUCKETS} AS bucket
   FROM documents WHERE length(text) > 0
 """
     ctes = [

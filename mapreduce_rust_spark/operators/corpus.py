@@ -34,6 +34,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql, single_partition
+from mapreduce_rust_spark.functions.text import (
+    hash64,
+    hash64_sql,
+    normalize_sql,
+    normalize_text,
+    tokenize_whitespace,
+)
 from mapreduce_rust_spark.sources.tables import fan_out, load_table
 
 ORACLE: dict[str, str] = {}
@@ -962,7 +969,6 @@ def sample_quality_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one scan with a fused filter. Output is the per-source census:
     total docs, kept docs, mean quality (≈ expected keep rate), and
     the realized keep ratio."""
-    from mapreduce_rust_spark.functions.text import hash64
     from mapreduce_rust_spark.operators.text_analysis import _quality_exprs
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
@@ -995,7 +1001,7 @@ def _quality_weighted_oracle() -> str:
 WITH q AS ({_quality_sql()}),
 labeled AS (
   SELECT d.source,
-         CASE WHEN ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT
+         CASE WHEN {hash64_sql('CAST(d.doc_id AS VARCHAR)')}
                    % 1048576 / 1048576.0
                 < least(greatest(q.quality_score, 0), 1)
               THEN 1 ELSE 0 END AS kept,
@@ -1329,7 +1335,6 @@ def corpus_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     array expressions (zero shuffle); only the 16-byte chunk hash +
     counts shuffle for the census. At 100 TB: one scan, one hash
     aggregation on a well-spread key."""
-    from mapreduce_rust_spark.functions.text import hash64, tokenize_whitespace
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     toks = tokenize_whitespace("text")
@@ -1405,7 +1410,7 @@ WITH d AS (
 ),
 h AS (
   SELECT doc_id, l,
-         list_transform(l, x -> ('0x' || substr(md5(x), 1, 15))::BIGINT
+         list_transform(l, x -> {hash64_sql('x')}
                                 % {CDC_MODULUS}) AS hm
   FROM d WHERE len(l) > 0
 ),
@@ -1595,7 +1600,6 @@ def sample_weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cousin, this one guarantees the exact sample size). u is the
     md5-derived fraction in (0,1) — deterministic, replayable,
     engine-reproducible; strictly positive so ln() is total."""
-    from mapreduce_rust_spark.functions.text import hash64
 
     docs = load_table(spark, sf_dir, "documents")
     u = (
@@ -1633,7 +1637,7 @@ SELECT CAST(rnk AS INT) AS rnk, doc_id, source, n_chars
 FROM (
   SELECT doc_id, source, n_chars,
          row_number() OVER (
-           ORDER BY ln((('0x' || substr(md5('aes:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+           ORDER BY ln(({hash64_sql("'aes:' || CAST(doc_id AS VARCHAR)")}
                         % 1048576 + 1) / CAST(1048577 AS DOUBLE))
                     / CAST(n_chars AS DOUBLE) DESC,
                     doc_id
@@ -1672,10 +1676,7 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.filter(F.split("text", r"\s+"), lambda t: t != "")
         ).alias("tok"),
     )
-    bucket = (
-        F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("bigint")
-        % DSIR_BUCKETS
-    )
+    bucket = hash64("tok") % DSIR_BUCKETS
     dbc = (
         toks.select("doc_id", "source", bucket.alias("bucket"))
         .groupBy("doc_id", "source", "bucket")
@@ -1725,7 +1726,7 @@ WITH toks AS (
 ),
 dbc AS (
   SELECT doc_id, source,
-         ('0x' || substr(md5(tok), 1, 15))::BIGINT % {DSIR_BUCKETS} AS bucket,
+         {hash64_sql('tok')} % {DSIR_BUCKETS} AS bucket,
          count(*) AS c
   FROM toks GROUP BY 1, 2, 3
 ),
@@ -1780,22 +1781,13 @@ def corpus_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.posexplode(
             F.filter(
-                F.split(
-                    F.trim(
-                        F.regexp_replace(F.lower("text"), "[^a-z0-9]+", " ")
-                    ),
-                    " ",
-                ),
+                F.split(normalize_text("text"), " "),
                 lambda x: x != F.lit(""),
             )
         ).alias("pos", "tok"),
     )
     start = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", "doc_id", "pos")), 1, 15),
-            16,
-            10,
-        ).cast("bigint")
+        hash64(F.concat_ws(":", "doc_id", "pos"))
         % SPAN_START_MOD
         == 0
     ).cast("int")
@@ -1843,14 +1835,14 @@ WITH positions AS (
   FROM (
     SELECT doc_id,
            list_filter(
-             string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
+             string_split({normalize_sql('text')}, ' '),
              x -> x <> '') AS l
     FROM documents
   ) x
 ),
 flagged AS (
   SELECT doc_id, pos,
-         CASE WHEN ('0x' || substr(md5(doc_id || ':' || pos), 1, 15))::BIGINT
+         CASE WHEN {hash64_sql("doc_id || ':' || pos")}
                    % {SPAN_START_MOD} = 0
               THEN 1 ELSE 0 END AS st
   FROM positions
@@ -2385,7 +2377,6 @@ def corpus_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash matches ``dedup_exact_normalized`` semantics, so the
     effective-doc total equals that census's survivor count by
     construction."""
-    from mapreduce_rust_spark.functions.text import normalize_text
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     n_toks = F.size(
@@ -2427,7 +2418,7 @@ WITH hashed AS (
   SELECT doc_id, source,
          CAST(len(list_filter(string_split_regex(text, '\s+'),
                               x -> x <> '')) AS BIGINT) AS n_tok,
-         md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
+         md5({normalize_sql('text')})
            AS chash
   FROM documents
 ),

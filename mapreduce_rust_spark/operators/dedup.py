@@ -41,6 +41,8 @@ from pyspark.sql import functions as F
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql, single_partition
 from mapreduce_rust_spark.functions.text import (
     hash64,
+    hash64_sql,
+    normalize_sql,
     normalize_text,
     tokenize_whitespace,
     word_shingles,
@@ -54,12 +56,12 @@ ORACLE: dict[str, str] = {}
 # --- shared SQL fragments (DuckDB side of the shared semantics) -----
 
 # normalized tokens with 1-based positions
-_TOK_SQL = """
+_TOK_SQL = f"""
   SELECT doc_id, generate_subscripts(l, 1) AS pos, unnest(l) AS w
   FROM (
-    SELECT doc_id, string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS l
+    SELECT doc_id, string_split({normalize_sql('text')}, ' ') AS l
     FROM documents
-    WHERE trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) <> ''
+    WHERE {normalize_sql('text')} <> ''
   ) x
 """
 
@@ -70,10 +72,6 @@ _SHINGLE_SQL = f"""
   JOIN ({_TOK_SQL}) b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
   JOIN ({_TOK_SQL}) c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
 """
-
-# md5-derived 60-bit hash (mirrors functions.text.hash64)
-def _h64_sql(expr: str) -> str:
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
 
 
 def _capped_shingle_sql(max_df: int) -> str:
@@ -407,7 +405,7 @@ def _lsh_star_oracle() -> str:
     params = ", ".join(f"({j}, {a}, {b})" for j, (a, b) in enumerate(_minhash_params()))
     return f"""
 WITH ds AS ({_SHINGLE_SQL}),
-h AS (SELECT doc_id, {_h64_sql('s')} AS h FROM ds),
+h AS (SELECT doc_id, {hash64_sql('s')} AS h FROM ds),
 params(j, a, b) AS (VALUES {params}),
 sig AS (
   SELECT doc_id, j,
@@ -831,7 +829,7 @@ def _lsh_incremental_oracle() -> str:
     )
     return f"""
 WITH ds AS ({_SHINGLE_SQL}),
-h AS (SELECT doc_id, {_h64_sql('s')} AS h FROM ds),
+h AS (SELECT doc_id, {hash64_sql('s')} AS h FROM ds),
 params(j, a, b) AS (VALUES {params}),
 sig AS MATERIALIZED (
   SELECT doc_id, j,
@@ -982,7 +980,7 @@ def _minhash_oracle() -> str:
     params = ", ".join(f"({j}, {a}, {b})" for j, (a, b) in enumerate(_minhash_params()))
     return f"""
 WITH ds AS ({_SHINGLE_SQL}),
-h AS (SELECT doc_id, {_h64_sql('s')} AS h FROM ds),
+h AS (SELECT doc_id, {hash64_sql('s')} AS h FROM ds),
 params(j, a, b) AS (VALUES {params}),
 sig AS (
   SELECT doc_id, j,
@@ -1108,7 +1106,7 @@ WITH tokf AS (
   SELECT doc_id, w, count(*) AS f FROM ({_TOK_SQL}) GROUP BY 1, 2
 ),
 th AS (
-  SELECT doc_id, {_h64_sql('w')} & {(1 << _SIMHASH_BITS) - 1} AS h, f FROM tokf
+  SELECT doc_id, {hash64_sql('w')} & {(1 << _SIMHASH_BITS) - 1} AS h, f FROM tokf
 ),
 bits AS (
   SELECT doc_id, j, sum(f * (2 * ((h >> j) & 1) - 1)) AS wgt
@@ -1287,7 +1285,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["dedup_cross_source_matrix"] = rf"""
 WITH lists AS (
   SELECT source,
-         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS l
+         string_split({normalize_sql('text')}, ' ') AS l
   FROM documents
 ),
 sh AS (
@@ -1329,8 +1327,8 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["dedup_exact_normalized"] = """
-SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS chash,
+ORACLE["dedup_exact_normalized"] = f"""
+SELECT md5({normalize_sql('text')}) AS chash,
        min(doc_id) AS keep_id, count(*) AS n_copies
 FROM documents
 GROUP BY 1
@@ -1434,7 +1432,7 @@ def dedup_lsh_band_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bucket midpoint, clamped to 1.0: the j=1.0 bucket (exact dups) is
     # populated, and an unclamped midpoint of 1.05 makes s^r exceed 1 so
     # P(s) = 1-(1-s^r)^b leaves [0,1] — for b=1 that minted NEGATIVE
-    # expected-FN mass and flipped is_best (r09 ADVICE, high).
+    # expected-FN mass and flipped is_best.
     mid = F.least(F.col("j_bucket") + F.lit(0.05), F.lit(1.0))
     p_collide = F.lit(1.0) - F.pow(
         F.lit(1.0) - F.pow(mid, F.col("cfg.r")), F.col("cfg.b")
@@ -1633,7 +1631,7 @@ def _bloom_pos(col, j: int):
 
 def _bloom_pos_sql(expr: str, j: str) -> str:
     seeded = f"'bf' || {j} || ':' || {expr}"
-    return f"({_h64_sql(seeded)} % {_BLOOM_M})"
+    return f"({hash64_sql(seeded)} % {_BLOOM_M})"
 
 
 def bloom_prefilter(
@@ -1922,7 +1920,7 @@ WITH cand AS (
   SELECT d1, d2 FROM ({_minhash_oracle()}) WHERE est_sim >= 0.5
 ),
 ds AS ({_SHINGLE_SQL}),
-h AS (SELECT doc_id, {_h64_sql('s')} AS h FROM ds),
+h AS (SELECT doc_id, {hash64_sql('s')} AS h FROM ds),
 params(j, a, b) AS (VALUES {", ".join(f"({j}, {a}, {b})" for j, (a, b) in enumerate(_minhash_params()))}),
 sig AS (
   SELECT doc_id, j,
@@ -2150,8 +2148,8 @@ WITH RECURSIVE cand AS MATERIALIZED (
 ),
 tok AS MATERIALIZED (
   SELECT doc_id,
-         list_filter(string_split(trim(regexp_replace(lower(text),
-             '[^a-z0-9]+', ' ', 'g')), ' '), x -> x <> '')[1:{ROUGE_PREFIX_TOKENS}] AS tok
+         list_filter(string_split({normalize_sql('text')}, ' '),
+             x -> x <> '')[1:{ROUGE_PREFIX_TOKENS}] AS tok
   FROM documents
 ),
 sized AS MATERIALIZED (
@@ -2229,7 +2227,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     (worker.rs:151); this is the same partition-then-local-work shape
     with an ordered neighborhood instead of a hash bucket."""
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower("text"), "[^a-z0-9]+", " "))
+    norm = normalize_text("text")
     base = docs.select(
         "doc_id",
         "source",
@@ -2285,7 +2283,7 @@ WITH ranked AS (
   SELECT doc_id, source,
          row_number() OVER (
            PARTITION BY source
-           ORDER BY substr(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), 1, {SN_KEY_LEN}), doc_id
+           ORDER BY substr({normalize_sql('text')}, 1, {SN_KEY_LEN}), doc_id
          ) AS rn
   FROM documents
 ),

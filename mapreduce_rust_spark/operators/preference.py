@@ -35,17 +35,18 @@ Scale notes:
   frames. Iterates are normalized to mean 1 so the fixed-point
   rounding (``fround``) keeps full resolution at any corpus size.
 * **Judge audits** — position bias is one duel-keyed aggregation to
-  PREF_RATERS rows; the agreement matrix joins the per-rater verdict
+  PREF_RATERS rows; the agreement matrix joins the per-rater judgment
   table to itself on the duel id (equi, high cardinality) and
   aggregates to R(R-1)/2 rows. Both are single-shuffle linear passes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql
+from mapreduce_rust_spark.functions.text import hash64, hash64_sql
 from mapreduce_rust_spark.indexes import session_index
 from mapreduce_rust_spark.sources.tables import fan_out, load_table
 
@@ -71,12 +72,6 @@ PREF_CI_Z = 1.96        # normal z for the 95% strength confidence interval
 PREF_TOPK = 25          # leaderboard size emitted by the fit slugs
 
 
-def _h64(col: Column) -> Column:
-    """60-bit non-negative hash, bit-identical to the DuckDB twin
-    ``('0x' || substr(md5(x), 1, 15))::BIGINT``."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
 def _duel_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deterministic duel table: one row per (doc pair, rater)
     with the judged outcome. Quality scores are the latent strengths;
@@ -86,7 +81,7 @@ def _duel_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     q = quality_scores(docs, "doc_id", "text").select("doc_id", "quality_score")
-    hk = _h64(F.concat(F.lit("prefh="), F.col("doc_id").cast("string")))
+    hk = hash64(F.concat(F.lit("prefh="), F.col("doc_id").cast("string")))
     ranked = (
         q.select(
             "doc_id",
@@ -132,9 +127,9 @@ def _duel_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("rater_i")
     )
     key = F.concat(F.col("did"), F.lit("#"), F.col("rater").cast("string"))
-    first_is_a = (_h64(F.concat(F.lit("pos:"), key)) % 2) == 0
+    first_is_a = (hash64(F.concat(F.lit("pos:"), key)) % 2) == 0
     noise = (
-        (_h64(F.concat(F.lit("nz:"), key)) % 2001 - F.lit(1000)) / F.lit(1000.0)
+        (hash64(F.concat(F.lit("nz:"), key)) % 2001 - F.lit(1000)) / F.lit(1000.0)
     ) * F.lit(PREF_NOISE)
     bias = F.when(
         F.col("rater") == PREF_BIASED_RATER,
@@ -449,7 +444,7 @@ def pref_rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise inter-rater reliability matrix: for every judge pair,
     observed agreement on shared duels and Cohen's kappa against the
     chance agreement implied by each judge's A-win marginal. The
-    verdict table joins to itself on the duel id (equi-keyed, linear)
+    judgment table joins to itself on the duel id (equi-keyed, linear)
     and aggregates to R(R−1)/2 rows."""
     duels = duel_index(spark, sf_dir)
     rw = duels.select("did", "rater", F.col("a_wins").cast("int").alias("wa"))
@@ -494,7 +489,7 @@ def pref_rater_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def pref_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fleiss' kappa (1971) across ALL judges at once: per duel the
-    pairwise-agreement share among the R verdicts, averaged, against
+    pairwise-agreement share among the R judgments, averaged, against
     the chance agreement from the pooled A-win marginal. One
     duel-keyed aggregation then one global scalar — the single-number
     answer to "is this judge fleet consistent enough to label with"."""
@@ -529,10 +524,6 @@ def pref_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _h64_sql(expr: str) -> str:
-    return f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
-
-
 def _duel_prefix() -> str:
     """Shared CTE chain: quality scores → blocked ranking → offset
     pairing → per-rater judged duels. MATERIALIZED throughout (DuckDB
@@ -542,10 +533,10 @@ def _duel_prefix() -> str:
     nz_key = "'nz:' || p.did || '#' || CAST(r.rater AS VARCHAR)"
     pos_key = "'pos:' || p.did || '#' || CAST(r.rater AS VARCHAR)"
     noise = (
-        f"(({_h64_sql(nz_key)}"
+        f"(({hash64_sql(nz_key)}"
         f" % 2001 - 1000) / 1000.0) * {PREF_NOISE}"
     )
-    first = f"{_h64_sql(pos_key)} % 2 = 0"
+    first = f"{hash64_sql(pos_key)} % 2 = 0"
     bias = (
         f"CASE WHEN rater = {PREF_BIASED_RATER} THEN"
         f" CASE WHEN first_is_a THEN {PREF_POS_BONUS}"
@@ -557,8 +548,8 @@ ranked AS MATERIALIZED (
          row_number() OVER (PARTITION BY block ORDER BY hkey, doc_id) AS rn
   FROM (
     SELECT doc_id, quality_score AS s,
-           {_h64_sql("'prefh=' || CAST(doc_id AS VARCHAR)")} AS hkey,
-           {_h64_sql("'prefh=' || CAST(doc_id AS VARCHAR)")} % {PREF_BLOCKS} AS block
+           {hash64_sql("'prefh=' || CAST(doc_id AS VARCHAR)")} AS hkey,
+           {hash64_sql("'prefh=' || CAST(doc_id AS VARCHAR)")} % {PREF_BLOCKS} AS block
     FROM q
   ) h
 ),

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql
+from mapreduce_rust_spark.functions.text import hash64, hash64_sql
 from mapreduce_rust_spark.sources.tables import fan_out, load_table
 
 ORACLE: dict[str, str] = {}
@@ -572,12 +573,8 @@ def privacy_dp_exponential_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = ev.groupBy(
         "event_type", F.hour("ts").alias("hh")
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    u = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("em:"), F.col("event_type"),
-                           F.lit(":"), F.col("hh").cast("string"))),
-            1, 15,
-        ), 16, 10,
+    u = hash64(
+        F.concat(F.lit("em:"), F.col("event_type"), F.lit(":"), F.col("hh").cast("string"))
     ).cast("double") / F.lit(float(2**60))
     gumbel = -F.log(-F.log(F.greatest(F.lit(1e-15), u)))
     scored = grid.withColumn(
@@ -612,8 +609,7 @@ scored AS (
   SELECT event_type, hh, cnt,
          {EM_EPSILON / 2.0} * cnt
            - ln(-ln(greatest(1e-15,
-               ('0x' || substr(md5('em:' || event_type || ':'
-                               || CAST(hh AS VARCHAR)), 1, 15))::BIGINT
+               {hash64_sql("'em:' || event_type || ':' || CAST(hh AS VARCHAR)")}
                / CAST({float(2**60)} AS DOUBLE)))) AS score
   FROM grid
 ),
@@ -655,9 +651,7 @@ def privacy_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("true_cnt")
     )
     # uniform in [0,1) from 60 hash bits; shift to (-0.5, 0.5]
-    u = F.conv(
-        F.substring(F.md5(F.concat(F.lit("dp:"), F.col("k"))), 1, 15), 16, 10
-    ).cast("double") / F.lit(float(2**60))
+    u = hash64(F.concat(F.lit("dp:"), F.col("k"))).cast("double") / F.lit(float(2**60))
     s = u - F.lit(0.5)
     b = 1.0 / DP_EPSILON
     noise = (
@@ -682,7 +676,7 @@ WITH counts AS (
 ),
 noised AS (
   SELECT k, true_cnt,
-         (('0x' || substr(md5('dp:' || k), 1, 15))::BIGINT
+         ({hash64_sql("'dp:' || k")}
             / CAST({float(2**60)} AS DOUBLE)) - 0.5 AS s
   FROM counts
 )
@@ -720,9 +714,7 @@ def privacy_dp_sum_clipped(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(clipped).alias("clip_sum"),
         F.sum((F.col("value") > DP_CLIP).cast("bigint")).alias("n_clipped"),
     )
-    u = F.conv(
-        F.substring(F.md5(F.concat(F.lit("dpsum:"), F.col("k"))), 1, 15), 16, 10
-    ).cast("double") / F.lit(float(2**60))
+    u = hash64(F.concat(F.lit("dpsum:"), F.col("k"))).cast("double") / F.lit(float(2**60))
     s = u - F.lit(0.5)
     b = DP_CLIP / DP_EPSILON
     noise = (
@@ -756,7 +748,7 @@ WITH agg AS (
 ),
 noised AS (
   SELECT k, true_sum, clip_sum, n_clipped,
-         (('0x' || substr(md5('dpsum:' || k), 1, 15))::BIGINT
+         ({hash64_sql("'dpsum:' || k")}
             / CAST({float(2**60)} AS DOUBLE)) - 0.5 AS s
   FROM agg
 )
@@ -783,7 +775,7 @@ def table_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT-TEST sibling of ``table_drift_psi``: D = max |F₁(v) − F₂(v)|
     between the first and second half of the observation window, with
     the α=0.05 critical value c(α)·√((n₁+n₂)/(n₁n₂)) and a drift
-    verdict per type. The ECDFs are compared on the integer-quantized
+    flag per type. The ECDFs are compared on the integer-quantized
     value grid (floor(value)) — the streaming-KS standard: the grid
     is bounded by the VALUE DOMAIN, not the row count, so the
     per-type cumulative window runs on a provably-bounded frame at
@@ -1102,7 +1094,7 @@ def table_fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     opportunities, validates assumed invariants (key → attribute),
     and catches silent data corruption (a 'held' FD that starts
     violating). Per candidate: lhs group count, groups with >1
-    distinct rhs, max rhs fan-out, and the verdict — so a violated
+    distinct rhs, max rhs fan-out, and whether it holds — so a violated
     candidate shows HOW violated, not just a boolean. Each check is
     one two-level aggregation keyed on lhs (partial-aggregatable;
     the violating-group count is |lhs|-sized, never row-sized)."""
@@ -1731,15 +1723,9 @@ def privacy_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = cust.crossJoin(F.broadcast(prior)).select(
         F.col("c_nationkey").alias("nationkey"),
         (F.col("c_acctbal") > F.col("bal_mean")).cast("int").alias("y"),
-        (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("rr:"), "c_custkey")), 1, 15),
-                16,
-                10,
-            ).cast("bigint")
-            % RR_FLIP_MOD
-            == 0
-        ).cast("int").alias("flip"),
+        (hash64(F.concat(F.lit("rr:"), "c_custkey")) % RR_FLIP_MOD == 0)
+        .cast("int")
+        .alias("flip"),
     )
     noised = truth.select(
         "nationkey",
@@ -1780,7 +1766,7 @@ WITH truth AS (
   SELECT c_nationkey AS nationkey,
          CASE WHEN c_acctbal > (SELECT avg(c_acctbal) FROM customer)
               THEN 1 ELSE 0 END AS y,
-         CASE WHEN ('0x' || substr(md5('rr:' || c_custkey), 1, 15))::BIGINT
+         CASE WHEN {hash64_sql("'rr:' || c_custkey")}
                    % {RR_FLIP_MOD} = 0
               THEN 1 ELSE 0 END AS flip
   FROM customer
@@ -1892,7 +1878,7 @@ def table_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation: the child aggregates to its distinct key set first
     (shrinking the join input to |keys|), then a broadcast/keyed join
     against the parent's key column; orphan ROW counts recover by
-    joining the per-key verdict back to per-key child counts — so the
+    joining the per-key orphan flag back to per-key child counts — so the
     fact table is scanned once per edge and never joined row-by-row
     against the parent. Long-form output, one row per FK edge."""
     outs = []
@@ -1904,7 +1890,7 @@ def table_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys = c.groupBy(F.col(fk).alias("_fk")).agg(
             F.count(F.lit(1)).alias("_n")
         )
-        verdict = keys.join(
+        flagged = keys.join(
             p, keys["_fk"] == p["_pk"], "left"
         ).select(
             "_fk",
@@ -1912,7 +1898,7 @@ def table_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_pk").isNull().cast("int").alias("_orphan"),
         )
         outs.append(
-            verdict.agg(
+            flagged.agg(
                 F.lit(f"{child}.{fk}->{parent}.{pk}").alias("fk_edge"),
                 F.sum("_n").alias("child_rows"),
                 F.count(F.lit(1)).alias("distinct_fks"),
@@ -1967,8 +1953,8 @@ def table_missingness_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOINT pattern — which column-combinations go missing together —
     the diagnostic that separates MCAR from "the mobile client never
     sends value AND props" systematic gaps, and decides impute vs
-    drop per pattern. The testdata ships no physical NULLs (re-probed
-    round 7), so missingness is injected deterministically
+    drop per pattern. The testdata ships no physical NULLs, so
+    missingness is injected deterministically
     (md5-derived per-column coin flips at 10%/25%/5% — the same
     hash-not-RNG convention as ``privacy_dp_counts``), which is
     exactly what makes the joint census value-checkable in DuckDB.
@@ -1979,15 +1965,7 @@ def table_missingness_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
 
     def miss(tag: str, pct: int):
-        h = F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(tag + ":"), F.col("event_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        h = hash64(F.concat(F.lit(tag + ":"), F.col("event_id").cast("string")))
         return (h % 100 < pct).cast("int")
 
     flags = ev.select(
@@ -2019,9 +1997,9 @@ def table_missingness_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["table_missingness_patterns"] = f"""
 WITH flags AS (
   SELECT
-    CASE WHEN ('0x' || substr(md5('mv:' || CAST(event_id AS VARCHAR)), 1, 15))::BIGINT % 100 < 10 THEN 1 ELSE 0 END AS m_value,
-    CASE WHEN ('0x' || substr(md5('mp:' || CAST(event_id AS VARCHAR)), 1, 15))::BIGINT % 100 < 25 THEN 1 ELSE 0 END AS m_props,
-    CASE WHEN ('0x' || substr(md5('mu:' || CAST(event_id AS VARCHAR)), 1, 15))::BIGINT % 100 < 5 THEN 1 ELSE 0 END AS m_user
+    CASE WHEN {hash64_sql("'mv:' || CAST(event_id AS VARCHAR)")} % 100 < 10 THEN 1 ELSE 0 END AS m_value,
+    CASE WHEN {hash64_sql("'mp:' || CAST(event_id AS VARCHAR)")} % 100 < 25 THEN 1 ELSE 0 END AS m_props,
+    CASE WHEN {hash64_sql("'mu:' || CAST(event_id AS VARCHAR)")} % 100 < 5 THEN 1 ELSE 0 END AS m_user
   FROM events
 )
 SELECT CAST(m_value AS VARCHAR) || CAST(m_props AS VARCHAR) || CAST(m_user AS VARCHAR) AS pattern,

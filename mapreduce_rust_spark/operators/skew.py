@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql
+from mapreduce_rust_spark.functions.text import hash64, hash64_sql
 from mapreduce_rust_spark.sources.tables import load_table
 
 ORACLE: dict[str, str] = {}
@@ -191,8 +192,6 @@ RING_VNODES = 8  # virtual nodes per shard
 def _ring(spark: SparkSession, n_shards: int) -> DataFrame:
     """Hash-ring vnode table for ``n_shards`` shards: (shard, vh).
     Tiny (shards × vnodes rows) — always broadcast."""
-    from mapreduce_rust_spark.functions.text import hash64
-
     rows = [(s, v) for s in range(n_shards) for v in range(RING_VNODES)]
     ring = spark.createDataFrame(rows, "shard int, v int")
     return ring.select(
@@ -211,8 +210,6 @@ def _ring(spark: SparkSession, n_shards: int) -> DataFrame:
 def _assign(docs: DataFrame, ring: DataFrame) -> DataFrame:
     """(doc_id, shard): each key goes to the first vnode clockwise
     from its hash (wraparound to the ring's global minimum)."""
-    from mapreduce_rust_spark.functions.text import hash64
-
     keyed = docs.select(
         "doc_id",
         hash64(F.concat(F.lit("doc:"), F.col("doc_id").cast("string"))).alias(
@@ -275,7 +272,7 @@ skew_consistent_shards.__doc__ = skew_consistent_shards.__doc__.format(
 
 def _ring_sql(n_shards: int) -> str:
     rows = ", ".join(
-        f"({s}, ('0x' || substr(md5('ring:{s}:{v}'), 1, 15))::BIGINT)"
+        f"""({s}, {hash64_sql(f"'ring:{s}:{v}'")})"""
         for s in range(n_shards)
         for v in range(RING_VNODES)
     )
@@ -291,7 +288,7 @@ def _assign_sql(n_shards: int) -> str:
              ORDER BY CASE WHEN ring.vh >= k.hd THEN 0 ELSE 1 END, ring.vh)
              AS rn
     FROM (SELECT doc_id,
-                 ('0x' || substr(md5('doc:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+                 {hash64_sql("'doc:' || CAST(doc_id AS VARCHAR)")}
                    AS hd
           FROM documents) k
     CROSS JOIN {_ring_sql(n_shards)}

@@ -19,7 +19,10 @@ from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql, single_partition
 from mapreduce_rust_spark.functions.text import (
+    bpe_ish_tokens,
     hash64,
+    hash64_sql,
+    normalize_sql,
     normalize_text,
     tokenize_whitespace,
     word_shingles,
@@ -180,7 +183,7 @@ def _language_id_sql(src: str = "documents") -> str:
     return f"""
 WITH n AS (
   SELECT doc_id,
-         list_distinct(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS toks
+         list_distinct(string_split({normalize_sql('text')}, ' ')) AS toks
   FROM {src}
 ),
 h AS (
@@ -202,7 +205,7 @@ def fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     norm = normalize_text(F.col(text_col))
     toks = tokenize_whitespace(norm)
     min_tok_hash = F.array_min(
-        F.transform(toks, lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint"))
+        F.transform(toks, hash64)
     )
     return df.filter(F.length(norm) > 0).select(
         F.col(id_col),
@@ -239,8 +242,6 @@ def text_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace counts, plus chars-per-pretoken (the compression-ratio
     proxy used to budget LLM training tokens). Same regex string
     evaluated by both engines."""
-    from mapreduce_rust_spark.functions.text import bpe_ish_tokens
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     bpe = bpe_ish_tokens(F.col("text"))
     ws = tokenize_whitespace(F.col("text"))
@@ -376,16 +377,14 @@ text_winnowing_fingerprints.__doc__ = text_winnowing_fingerprints.__doc__.format
 ORACLE["text_winnowing_fingerprints"] = f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split(trim(regexp_replace(lower(text),
-             '[^a-z0-9]+', ' ', 'g')), ' '), x -> x <> '') AS l
+         list_filter(string_split({normalize_sql('text')}, ' '), x -> x <> '') AS l
   FROM documents
 ),
 grams AS (
   SELECT doc_id,
          list_transform(
            generate_series(1, len(l) - {WIN_K - 1}),
-           i -> ('0x' || substr(md5(array_to_string(l[i:i+{WIN_K - 1}], ' ')),
-                 1, 15))::BIGINT
+           i -> {hash64_sql(f"array_to_string(l[i:i+{WIN_K - 1}], ' ')")}
          ) AS h
   FROM toks WHERE len(l) >= {WIN_K}
 ),
@@ -409,17 +408,17 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fingerprints(fan_out(load_table(spark, sf_dir, "documents")), "doc_id", "text")
 
 
-ORACLE["text_fingerprint"] = """
+ORACLE["text_fingerprint"] = f"""
 WITH n AS (
   SELECT doc_id,
-         trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS norm
+         {normalize_sql('text')} AS norm
   FROM documents
 )
 SELECT doc_id,
        md5(norm) AS fp_norm_md5,
        list_aggregate(
          list_transform(string_split(norm, ' '),
-                        x -> ('0x' || substr(md5(x), 1, 15))::BIGINT),
+                        x -> {hash64_sql('x')}),
          'min') AS fp_min_token_hash,
        CAST(length(norm) AS BIGINT) AS n_chars_norm
 FROM n WHERE norm <> ''
@@ -1179,8 +1178,6 @@ def winnowing_fingerprints(
     document; the fingerprint SET (explode before distinct) is the
     posting-list form a plagiarism index would store. All array
     expressions — linear per row, zero shuffle."""
-    from mapreduce_rust_spark.functions.text import hash64, word_shingles
-
     sh = word_shingles(F.col(text_col), k)
     hashes = F.transform(sh, hash64)
     base = df.select(F.col(id_col), hashes.alias("h"))
@@ -1218,13 +1215,13 @@ def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["text_winnowing"] = rf"""
 WITH lists AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS l
+         string_split({normalize_sql('text')}, ' ') AS l
   FROM documents
 ),
 sh AS (
   SELECT doc_id,
          list_transform(generate_series(1, greatest(len(l) - {WINNOW_K - 1}, 0)),
-           i -> ('0x' || substr(md5(l[i] || ' ' || l[i+1] || ' ' || l[i+2]), 1, 15))::BIGINT) AS h
+           i -> {hash64_sql("l[i] || ' ' || l[i+1] || ' ' || l[i+2]")}) AS h
   FROM lists
 ),
 fp AS (
@@ -1738,14 +1735,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.explode(
             F.filter(
-                F.split(
-                    F.trim(
-                        F.regexp_replace(
-                            F.lower("text"), "[^a-z0-9]+", " "
-                        )
-                    ),
-                    " ",
-                ),
+                F.split(normalize_text("text"), " "),
                 lambda x: x != F.lit(""),
             )
         ).alias("tok"),
@@ -1792,7 +1782,7 @@ ORACLE["text_heaps_law"] = rf"""
 WITH toks AS (
   SELECT source,
          unnest(list_filter(
-           string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
+           string_split({normalize_sql('text')}, ' '),
            x -> x <> '')) AS tok
   FROM documents
 ),
@@ -1838,12 +1828,7 @@ def text_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.explode(
             F.filter(
-                F.split(
-                    F.trim(
-                        F.regexp_replace(F.lower("text"), "[^a-z0-9]+", " ")
-                    ),
-                    " ",
-                ),
+                F.split(normalize_text("text"), " "),
                 lambda x: x != F.lit(""),
             )
         ).alias("tok"),
@@ -1905,7 +1890,7 @@ ORACLE["text_jsd_drift"] = rf"""
 WITH toks AS (
   SELECT source,
          unnest(list_filter(
-           string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
+           string_split({normalize_sql('text')}, ' '),
            x -> x <> '')) AS tok
   FROM documents
 ),
@@ -2126,12 +2111,7 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(
             F.filter(
-                F.split(
-                    F.trim(
-                        F.regexp_replace(F.lower("text"), "[^a-z0-9]+", " ")
-                    ),
-                    " ",
-                ),
+                F.split(normalize_text("text"), " "),
                 lambda x: x != F.lit(""),
             )
         ).alias("term"),
@@ -2162,7 +2142,7 @@ ORACLE["text_term_burstiness"] = rf"""
 WITH toks AS (
   SELECT doc_id,
          unnest(list_filter(
-           string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
+           string_split({normalize_sql('text')}, ' '),
            x -> x <> '')) AS term
   FROM documents
 ),

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql
+from mapreduce_rust_spark.functions.text import hash64, hash64_sql
 from mapreduce_rust_spark.sources.tables import load_table
 
 ORACLE: dict[str, str] = {}
@@ -695,14 +696,14 @@ _HH_K = 48  # heavy-hitter threshold: words with count >= n_tokens / K
 
 
 def sketch_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT distributed heavy hitters in two rounds — the
+    """EXACT distributed heavy hitters in two passes — the
     candidate-then-verify pattern that makes "find every word above
-    n/k frequency" shuffle-bounded at 100 TB. Round 1 counts words
+    n/k frequency" shuffle-bounded at 100 TB. Pass 1 counts words
     per SPARK PARTITION (map-side combine; state bounded by
     per-partition vocab) and keeps words with local count >= n_p/k:
     by a pigeonhole argument any word with GLOBAL count >= n/k must
     clear that bar in at least one partition, so the candidate set
-    has no false negatives. Round 2 re-aggregates only the
+    has no false negatives. Pass 2 re-aggregates only the
     (already tiny) per-partition counts globally and applies the
     exact n/k threshold — so the OUTPUT is exactly the true
     heavy-hitter set, independent of partitioning, even though the
@@ -862,8 +863,6 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``hash64``-compatible) so both engines rank identically; est is
     matched/{k} with a power-of-two k, so the division is binary-
     exact."""
-    from mapreduce_rust_spark.functions.text import hash64
-
     docs = load_table(spark, sf_dir, "documents")
     toks = (
         docs.select(
@@ -958,7 +957,7 @@ WITH toks AS (
 ),
 hashed AS (
   SELECT source,
-         ('0x' || substr(md5('kmv:' || tok), 1, 15))::BIGINT AS h
+         {hash64_sql("'kmv:' || tok")} AS h
   FROM toks
 ),
 sk AS (

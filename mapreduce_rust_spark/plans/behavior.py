@@ -2092,7 +2092,7 @@ def ab_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = (z_α/2 + z_β)²·(p₁q₁ + p₂q₂)/(p₂−p₁)², compared against the
     users actually available per arm. Closed form over one distinct
     aggregation (the same (type, user) dedup the A/B readouts use);
-    all arithmetic identical in the oracle. An underpowered verdict
+    all arithmetic identical in the oracle. An underpowered flag
     here is what stops a team from reading noise as a result."""
     ev = load_table(spark, sf_dir, "events")
     n_users = ev.select("user_id").distinct().agg(
@@ -2663,7 +2663,7 @@ def ab_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     make z 0/0) are filtered with the SAME finite-z predicate in
     both engines — Spark orders NULL p first, DuckDB last, so a
     NULL/NaN p surviving to the rank window would silently shift
-    every rank/q-value across engines (ADVICE r08)."""
+    every rank/q-value across engines."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         (F.weekday("ts") + 1).alias("dow"),  # == DuckDB isodow: 1=Mon

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql
-from mapreduce_rust_spark.functions.text import bpe_ish_tokens
+from mapreduce_rust_spark.functions.text import bpe_ish_tokens, hash64_sql
 from mapreduce_rust_spark.operators.dedup import (
     duplicate_span_removal,
     exact_census_index,
@@ -129,16 +129,15 @@ def pipeline_prepare_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("keep_id").alias("doc_id")
     )
     sdocs = docs.join(survivors, "doc_id")
-    # r10 checkpointed ``cleaned`` because three consumers (quality,
-    # lang, kept) each inlined the 50+-Exchange span subtree (202
-    # Exchanges composed). The r11 gate fusion below leaves exactly
-    # ONE consumer, so the checkpoint became pure overhead — it
-    # materialized the full survivor corpus (text included) into
-    # executor storage for nothing, and was the measured source of
-    # the slug's super-linear sf1→sf10 exponent (1.25 with the
-    # checkpoint vs 0.53 for the span op itself). Single consumer ⇒
-    # recompute never happens ⇒ no checkpoint (guide §5: cache only
-    # what is reused AND expensive).
+    # ``cleaned`` is not checkpointed: the gate fusion below leaves
+    # it exactly ONE consumer (unfused, quality, lang and kept each
+    # inlined the 50+-Exchange span subtree, 202 Exchanges composed).
+    # A checkpoint here materializes the full survivor corpus (text
+    # included) into executor storage for nothing, and was the
+    # measured source of the slug's super-linear sf1→sf10 exponent
+    # (1.25 with the checkpoint vs 0.53 for the span op itself).
+    # Single consumer ⇒ recompute never happens ⇒ no checkpoint
+    # (guide §5: cache only what is reused AND expensive).
     cleaned = duplicate_span_removal(sdocs, "doc_id", "text").withColumnRenamed(
         "cleaned_text", "text"
     )
@@ -817,7 +816,7 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ``decontaminate_ngram_overlap`` and consumed twice below
     # (bench side + corpus side), so the span tokenization pass runs
     # once per session instead of twice per invocation (guide §5,
-    # the r09-verdict index-sharing pattern).
+    # the index-sharing pattern).
     sh = shingle_index(spark, sf_dir, k=PIPE_DECON_NGRAM_K)
     bench_spans = F.broadcast(sh.filter(is_bench).select("s").distinct())
     fe = (
@@ -954,7 +953,6 @@ def _pipeline_decontaminate_oracle() -> str:
     from mapreduce_rust_spark.operators.dedup import (
         MINHASH_PRIME,
         ROWS_PER_BAND,
-        _h64_sql,
         _minhash_params,
         _SHINGLE_SQL,
         _TOK_SQL,
@@ -1013,7 +1011,7 @@ fm_ids AS (
   WHERE maxsim >= {DECON_EMB_THR_HI}
 ),
 ds AS ({_SHINGLE_SQL}),
-h AS (SELECT doc_id, {_h64_sql('s')} AS h FROM ds),
+h AS (SELECT doc_id, {hash64_sql('s')} AS h FROM ds),
 params(j, a, b) AS (VALUES {params}),
 sig AS MATERIALIZED (
   SELECT doc_id, j,

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql, single_partition
+from mapreduce_rust_spark.functions.text import hash64, hash64_sql
 from mapreduce_rust_spark.sources.tables import load_table
 
 ORACLE: dict[str, str] = {}
@@ -650,8 +651,6 @@ def late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     running max in parallel — the same two-phase shape as
     ``corpus_shuffle_order``'s distributed rank. Exact integer
     microseconds end-to-end."""
-    from mapreduce_rust_spark.functions.text import hash64
-
     ev = load_table(spark, sf_dir, "events")
     tus = F.unix_micros("ts")
     arrival = tus + hash64(F.col("event_id").cast("string")) % 600000000
@@ -697,7 +696,7 @@ ORACLE["late_data_audit"] = f"""
 WITH arr AS (
   SELECT event_id, epoch_us(ts) AS tus,
          epoch_us(ts)
-           + ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))::BIGINT
+           + {hash64_sql('CAST(event_id AS VARCHAR)')}
              % 600000000 AS arr
   FROM events
 ),

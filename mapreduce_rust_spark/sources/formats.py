@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.numeric import single_partition
+from mapreduce_rust_spark.functions.text import hash64, hash64_sql
 from mapreduce_rust_spark.sources.tables import load_table
 
 ORACLE: dict[str, str] = {}
@@ -731,12 +732,7 @@ def table_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = os.path.join(scratch_dir(prefix="mrs_orphan_"), "events")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(root)
-    manifest_pred = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("man:"), F.col("event_type"))), 1, 15), 16, 10)
-        .cast("bigint")
-        % 2
-        == 0
-    )
+    manifest_pred = hash64(F.concat(F.lit("man:"), F.col("event_type"))) % 2 == 0
     back = spark.read.parquet(root)
     return (
         back.filter(~manifest_pred)
@@ -749,11 +745,11 @@ def table_orphan_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["table_orphan_files"] = """
+ORACLE["table_orphan_files"] = f"""
 SELECT event_type, count(*) AS n_rows,
        CAST(sum(length(props)) AS BIGINT) AS bytes_exposed
 FROM events
-WHERE ('0x' || substr(md5('man:' || event_type), 1, 15))::BIGINT % 2 <> 0
+WHERE {hash64_sql("'man:' || event_type")} % 2 <> 0
 GROUP BY 1 ORDER BY 1
 """
 

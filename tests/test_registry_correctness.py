@@ -48,6 +48,17 @@ def test_next_window_queue_directly_after_window():
     assert order[n : n + len(_NEXT_WINDOW)] == list(_NEXT_WINDOW)
 
 
+def test_survey_inventory_is_current():
+    """SURVEY.md §2d is generated from the registry: a slug added,
+    removed or moved to another family must land with the table
+    regenerated by ``python tools/gen_survey_inventory.py``."""
+    from gen_survey_inventory import build_table
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "SURVEY.md"), encoding="utf-8") as fh:
+        assert build_table() in fh.read()
+
+
 def test_unimportable_family_fails_the_registry(monkeypatch):
     """A family module that cannot be imported must fail queries(), on
     every call, instead of silently dropping its slugs."""

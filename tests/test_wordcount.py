@@ -6,6 +6,7 @@ with case-sensitive, punctuation-preserving whitespace tokenization
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -86,3 +87,70 @@ def test_wordcount_dataframe_counts(spark):
     df = spark.createDataFrame([("a b a",), ("b a",)], "text string")
     got = {r["word"]: r["cnt"] for r in wordcount(df, "text").collect()}
     assert got == {"a": 3, "b": 2}
+
+
+# The cross-engine twins in functions/text.py: each Spark expression
+# must agree with its DuckDB SQL, and no other module may spell either
+# primitive out again (a local copy drifts from its twin unnoticed).
+_TWIN_COPIES = {
+    "SQL hash": re.compile(r"substr\(md5\([^;]{0,1000}?\),\s*1,\s*15\)"),
+    "Spark hash": re.compile(r"F\.conv\(\s*F\.substring\(\s*F\.md5\([^;]{0,1000}?\),\s*1,\s*15\s*,?\s*\)"),
+    "normalization": re.compile(re.escape("[^a-z0-9]+")),
+}
+
+
+def test_text_twins_agree_and_have_one_owner(spark):
+    import duckdb
+
+    import mapreduce_rust_spark
+    from mapreduce_rust_spark.functions.text import (
+        hash64,
+        hash64_sql,
+        normalize_sql,
+        normalize_text,
+    )
+
+    samples = [
+        "",
+        "?!... ,;-- ''",
+        "Hello World HELLO wOrLd",
+        "Crème Brûlée, naïve café — Ünïcode!",
+        "日本語 テキスト",
+        "abc123 4567 0x1F 3.14",
+        "a   b \t\t c\n\nd   ",
+        "  leading and trailing  ",
+        "MiXeD-case_with_under+scores",
+        ("lorem Ipsum, DOLOR sit amet; " * 400)[:10240],
+    ]
+    rows = list(enumerate(samples))
+    got_spark = [
+        (r["h"], r["n"])
+        for r in spark.createDataFrame(rows, "i int, s string")
+        .select("i", hash64("s").alias("h"), normalize_text("s").alias("n"))
+        .orderBy("i")
+        .collect()
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i INTEGER, s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    got_sql = con.execute(
+        f"SELECT {hash64_sql('s')}, {normalize_sql('s')} FROM t ORDER BY i"
+    ).fetchall()
+    assert got_spark == [tuple(r) for r in got_sql]
+
+    root = os.path.dirname(mapreduce_rust_spark.__file__)
+    owner = os.path.join(root, "functions", "text.py")
+    copies = []
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if not name.endswith(".py") or path == owner:
+                continue
+            with open(path, encoding="utf-8") as fh:
+                src = fh.read()
+            copies += [
+                f"{os.path.relpath(path, root)}: {what}"
+                for what, pat in _TWIN_COPIES.items()
+                if pat.search(src)
+            ]
+    assert not copies, copies

@@ -98,23 +98,15 @@ def main() -> int:
     new.load()
     old.load()
 
-    # session factory from the new tree (identical confs both sides)
+    # session factory and warm-up from the new tree (identical confs
+    # both sides); the new side puts the repo root, and so
+    # ``perfbench``, first on sys.path
     with new:
         from mapreduce_rust_spark import get_spark
+        from perfbench.session import warm_up
 
         spark = get_spark("ab")
-    spark.range(1_000_000).selectExpr("sum(id) as s").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.read.parquet(os.path.join(sf_dir, "nation.parquet")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    import glob as _glob
-
-    for p in sorted(_glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        with open(p, "rb") as fh:
-            while fh.read(1 << 24):
-                pass
+        warm_up(spark, sf_dir, frozenset())
 
     for name in slugs:
         olds, news = [], []

@@ -3,7 +3,10 @@
 The implementation-status prose in §2a accreted by hand for seven
 rounds and would eventually contradict the registry; this table is
 emitted FROM ``registry.queries()`` so its counts match by
-construction. Run at every freeze:
+construction. Rows name each family's file, not line numbers, and
+list slugs sorted, so only a slug added, removed or moved to another
+family changes the table; ``tests/test_registry_correctness.py``
+fails when the committed table is stale. Regenerate with:
 
     python tools/gen_survey_inventory.py        # rewrites SURVEY.md in place
     python tools/gen_survey_inventory.py --check  # exit 1 if stale
@@ -50,40 +53,34 @@ def build_table() -> str:
 
     q = registry.queries()
     oracles = registry.oracle_sql()
-    rows = []
     pkg_root = os.path.dirname(
         os.path.dirname(os.path.abspath(__file__))
     )
+    by_family: dict[tuple[str, str], list[str]] = {}
     for slug, fn in q.items():
-        code = fn.__code__
-        rel = os.path.relpath(code.co_filename, pkg_root)
+        rel = os.path.relpath(fn.__code__.co_filename, pkg_root)
         mod_key = (
             rel.replace("mapreduce_rust_spark/", "")
             .replace(".py", "")
             .replace("/", ".")
         )
         family = FAMILY_LABEL.get(mod_key, mod_key)
-        rows.append((family, slug, f"{rel}:{code.co_firstlineno}"))
-
-    by_family: dict[str, list[tuple[str, str]]] = {}
-    for family, slug, loc in rows:
-        by_family.setdefault(family, []).append((slug, loc))
+        by_family.setdefault((family, rel), []).append(slug)
 
     lines = [
         BEGIN,
         "",
         f"**{len(q)} registered slugs** ({len(oracles)} with value oracles,"
         f" {len(q) - len(oracles)} rows-only), grouped by family. Every"
-        " row is a `queries()` entry the driver value-gates; file:line"
-        " points at the query callable.",
+        " slug is a `queries()` entry; the file defines its query"
+        " callable.",
         "",
-        "| family | n | slug → file:line |",
-        "|---|---|---|",
+        "| family | file | n | slugs |",
+        "|---|---|---|---|",
     ]
-    for family in sorted(by_family):
-        members = by_family[family]
-        cell = "; ".join(f"`{s}` {loc}" for s, loc in members)
-        lines.append(f"| {family} | {len(members)} | {cell} |")
+    for (family, rel), members in sorted(by_family.items()):
+        cell = "; ".join(f"`{s}`" for s in sorted(members))
+        lines.append(f"| {family} | {rel} | {len(members)} | {cell} |")
     lines += ["", END]
     return "\n".join(lines)
 

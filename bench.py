@@ -144,7 +144,7 @@ def main() -> int:
             failed[name] = {"sec": sec, "error": err}
             print(f"bench: {name} failed: {err}", file=sys.stderr)
 
-    # Outlier re-measure pass (r08 verdict ask #2): the host VM's
+    # Outlier re-measure pass: the host VM's
     # wall-clock noise regime is ±30-60% with individual queries
     # historically swinging up to 25×, and the same few corpus/profile
     # slugs keep minting >3× outliers in driver runs that warm A/Bs
@@ -155,9 +155,9 @@ def main() -> int:
     # noise, recorded; a re-run confirming the slow time = a real
     # regression the freeze gate must adjudicate.
     #
-    # r09 verdict ask #1a: the old ``best >= 0.5 s`` exemption let a
-    # 162x outlier (multimodal_decode_fake 55.15 s vs 0.34 s best)
-    # stand unadjudicated. Now ANY first measure exceeding
+    # A ``best >= 0.5 s`` exemption would let a 162x outlier
+    # (multimodal_decode_fake 55.15 s vs 0.34 s best) stand
+    # unadjudicated, so ANY first measure exceeding
     # max(3x best-of, 5 s) re-runs regardless of best-of magnitude
     # (and a slug with no best-of yet re-runs if it took > 5 s).
     side_path_prev = os.path.join(
@@ -193,20 +193,21 @@ def main() -> int:
         remeasured[name] = {"first": t, "rerun": t2, "best": b}
         timings[name] = min(t, t2)  # the better of the two is the measurement
 
-    # Two totals, kept separate (r09 ADVICE): ``first_total`` is the
+    # Two totals, kept separate: ``first_total`` is the
     # wall-clock of the actual first pass; ``total`` is the adjudicated
     # sum after the re-measure pass folded in the better of the two
     # same-session timings per outlier. The headline ``value`` is the
-    # adjudicated total (the artifact must adjudicate its own noise —
-    # r09 verdict ask #1b); the first-pass wallclock rides alongside so
-    # round-over-round comparisons are never skewed by the folding.
+    # adjudicated total (the artifact must adjudicate its own noise);
+    # the first-pass wallclock rides alongside so run-over-run
+    # comparisons are never skewed by the folding.
     total, _ = suite_totals(timings, failed)
     # Full per-query breakdown goes to a sidecar file; stdout carries ONE
     # compact JSON line. The driver captures only the LAST 2000 chars of
     # stdout and parses the JSON out of that window, so the line must stay
     # well under 2000 chars — with 84+ registry queries the full dict
-    # doesn't fit (round 1's did not parse). Report the slowest queries,
-    # which are the ones worth comparing against BASELINE.md.
+    # doesn't fit (a longer line is cut and fails to parse). Report the
+    # slowest queries, which are the ones worth comparing against
+    # BASELINE.md.
     #
     # MERGE-then-write: the sidecar's ``best_of`` map (per-query min
     # across every run at this sf — the number BASELINE.md cites) must
@@ -264,7 +265,7 @@ def main() -> int:
         },
         # partial same-sf runs MERGE into the previous re-measure map
         # (a subset run must not wipe the full suite's adjudication
-        # evidence out from under the freeze gate — r09 ADVICE)
+        # evidence out from under the freeze gate)
         "remeasured": (
             remeasured
             if not only
@@ -274,10 +275,9 @@ def main() -> int:
 
     # compact [first, rerun] pairs so the re-measure evidence lands in
     # the driver's BENCH_r{N}.json artifact, not just the sidecar.
-    # r10 verdict ask #1: the old trim loop popped ``queries`` entries
-    # BEFORE ``remeasured`` ones, so a noisy round (39 remeasure pairs)
-    # emptied the per-query map and the driver lost geomean/scaling.
-    # Invert the priority: cap remeasured at the ~10 worst pairs up
+    # Trimming ``queries`` entries BEFORE ``remeasured`` ones let a
+    # noisy run (39 remeasure pairs) empty the per-query map, losing
+    # geomean/scaling. So cap remeasured at the ~10 worst pairs up
     # front (full map is in the sidecar), keep as many slowest query
     # entries as fit, and only then shrink remeasured further.
     rem_line = {

@@ -9,8 +9,10 @@ from it. The datasource planner and writer runners (lookup, create,
 plan read, write setup, commit) ignore that conf and start stock
 ``pyspark.daemon``. Both kinds of daemon, and every other Python
 process Spark starts for a ``get_spark`` session, get the cheap
-import-cache reset from ``workerboot/sitecustomize.py``; a bare session
-gets neither the reset nor this daemon.
+import-cache reset from ``workerboot/sitecustomize.py``, which also
+makes them import pyspark and py4j from the installed, compiled copy
+when it matches Spark's source-only archives; a bare session gets
+neither the hook nor this daemon.
 
 The daemon imports pyarrow, pandas and numpy before it forks anything,
 then ``gc.freeze()``s the heap. Forked workers share those pages

@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from mapreduce_rust_spark.indexes import file_stamp
 
@@ -36,7 +37,9 @@ TABLE_NAMES = (
 BROADCAST_SAFE = ("region", "nation", "supplier")
 
 
-# (session id, sf_dir, table, file stamp) → analyzed DataFrame. A
+# (session id, sf_dir, table, file stamp) → (raw, normalized) analyzed
+# DataFrames: the raw read's schema (before ``normalize_ts``) is what
+# ``streaming.queries.read_stream_table`` streams with. A
 # load_table call costs ~0.2 s of py4j/footer/conf round-trips; queries
 # load 1-4 tables each, so across a 140-query suite the repeated loads
 # are a double-digit-seconds tax. DataFrames are immutable logical
@@ -48,7 +51,7 @@ BROADCAST_SAFE = ("region", "nation", "supplier")
 # — an invariant any future value type must preserve. The file stamp
 # in the key (``indexes.file_stamp``, which also invalidates session
 # indexes) drops stale plans when a host rewrites the parquet in place.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
+_TABLE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 # (id(frame), target) → (frame, fanned-out frame): fan_out's partition
 # probe (df.rdd → plan-to-RDD translation) and repartition-plan build
@@ -107,6 +110,17 @@ def normalize_ts(df: DataFrame) -> DataFrame:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table from ``{sf_dir}/{name}.parquet``."""
+    return _load(spark, sf_dir, name)[1]
+
+
+def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The parquet schema of one testdata table as Spark reads it,
+    before ``normalize_ts``, from the same cached read as
+    ``load_table``."""
+    return _load(spark, sf_dir, name)[0].schema
+
+
+def _load(spark: SparkSession, sf_dir: str, name: str) -> tuple[DataFrame, DataFrame]:
     if name not in TABLE_NAMES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_session_confs(spark)
@@ -116,11 +130,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
-    df = normalize_ts(spark.read.parquet(path))
+    raw = spark.read.parquet(path)
     if len(_TABLE_CACHE) > 256:  # bound growth in long-lived hosts
         _TABLE_CACHE.clear()
-    _TABLE_CACHE[key] = df
-    return df
+    _TABLE_CACHE[key] = frames = (raw, normalize_ts(raw))
+    return frames
 
 
 def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:

@@ -47,15 +47,12 @@ _DRAIN_TIMEOUT_S = 120.0
 
 def read_stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """``readStream`` twin of ``sources.tables.load_table``: same
-    path, same schema (taken from a metadata-only batch read), same
-    nanos→timestamp restoration."""
-    from mapreduce_rust_spark.sources.tables import ensure_session_confs, normalize_ts
+    path, same schema, same nanos→timestamp restoration. The raw
+    (pre-``normalize_ts``) schema comes from the batch loader's cached
+    read, so a repeat call runs no footer-read job."""
+    from mapreduce_rust_spark.sources.tables import normalize_ts, raw_schema
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    ensure_session_confs(spark)
-    # the RAW (pre-normalize_ts) schema is required here, so this
-    # footer read cannot reuse the batch loader's cached frame
-    schema = spark.read.parquet(path).schema
+    schema = raw_schema(spark, sf_dir, name)
     # the file-stream source requires a directory base path, so stream
     # the dataset dir filtered down to this table's file
     sdf = (
@@ -492,7 +489,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # 8 partitions: this plan commits 4 state stores per partition per
-    # micro-batch; measured 3.3 s at 8 vs 9.6 s at 32 (r03), and the
+    # micro-batch; measured 3.3 s at 8 vs 9.6 s at 32, and the
     # 16-partition session default still pays ~2× the 8-partition
     # commit fan-out for the same bounded replay
     out = run_available_now(joined, "append", partitions=8)

@@ -25,6 +25,17 @@ rewritten in place is still picked up on the next reset. Installing it
 reads and stamps every archive imported from so far, so a daemon's
 forked workers inherit the stamps and skip even their first re-read.
 
+Spark puts ``$SPARK_HOME/python/lib/pyspark.zip`` and the py4j source
+zip first on every worker's ``PYTHONPATH``. They hold ``.py`` files
+only, and zipimport never writes bytecode, so each process compiled
+pyspark from source: ``import pyspark.daemon`` took 1.59 s from the
+archive and 0.48 s from the pip-installed copy (same host). When the
+package installed further along ``sys.path`` has a byte-identical
+``version.py``, the hook moves the archive entries to the end of
+``sys.path``, where they stay as a fallback, and the process imports
+the installed copy and its ``__pycache__``. Otherwise ``sys.path`` stays
+exactly as Spark built it.
+
 This file shadows any ``sitecustomize`` further along ``sys.path``, so
 it runs that one too.
 """
@@ -71,6 +82,41 @@ def _install() -> None:
             finder.invalidate_caches()
 
 
+def _archive_version(entry: str, package: str) -> bytes | None:
+    """``package/version.py`` of the archive at ``sys.path`` entry
+    ``entry``, or None if ``entry`` is not an archive holding it."""
+    if not os.path.isfile(entry):
+        return None
+    try:
+        return zipimport.zipimporter(entry).get_data(f"{package}/version.py")
+    except (zipimport.ZipImportError, OSError):
+        return None
+
+
+def prefer_installed(package: str) -> None:
+    """Move the archives holding ``package`` to the end of ``sys.path``
+    if the copy of ``package`` found on the rest of it has the same
+    ``version.py`` bytes; otherwise leave ``sys.path`` unchanged."""
+    from importlib.machinery import PathFinder
+
+    versions = {entry: _archive_version(entry, package) for entry in sys.path}
+    archives = [entry for entry in sys.path if versions[entry] is not None]
+    if not archives:
+        return
+    rest = [entry for entry in sys.path if entry not in archives]
+    spec = PathFinder.find_spec(package, rest)
+    if spec is None or spec.origin is None:
+        return
+    try:
+        with open(os.path.join(os.path.dirname(spec.origin), "version.py"), "rb") as f:
+            installed = f.read()
+    except OSError:
+        return
+    if any(versions[entry] != installed for entry in archives):
+        return
+    sys.path[:] = rest + archives
+
+
 def _run_shadowed() -> None:
     """Run the next ``sitecustomize`` on ``sys.path`` after this one's
     directory, if there is one."""
@@ -87,5 +133,7 @@ def _run_shadowed() -> None:
 
 
 if __name__ == "sitecustomize":
+    for _package in ("pyspark", "py4j"):
+        prefer_installed(_package)
     _install()
     _run_shadowed()

@@ -5,6 +5,7 @@ import-cache reset every one of them installs at start-up
 
 from __future__ import annotations
 
+import glob
 import importlib
 import importlib.util
 import json
@@ -89,6 +90,37 @@ def test_reset_skips_unchanged_zip_and_rereads_rewritten(zip_on_path, monkeypatc
     assert len({id(imp._files) for imp in importers}) == 1
 
 
+@pytest.mark.parametrize(
+    "installed, moved",
+    [("__version__ = '1.0'\n", True), ("__version__ = '1.1'\n", False), (None, False)],
+    ids=["same-version", "other-version", "not-installed"],
+)
+def test_archive_yields_to_identical_installed_package(tmp_path, monkeypatch, installed, moved):
+    """An archive holding the package moves behind the rest of
+    ``sys.path`` only when the installed copy's ``version.py`` is
+    byte-identical; otherwise the path is left as it was."""
+    archive = str(tmp_path / "mrs_fake.zip")
+    _write_zip(
+        archive,
+        {"mrs_fakepkg/__init__.py": "", "mrs_fakepkg/version.py": "__version__ = '1.0'\n"},
+    )
+    other = str(tmp_path / "other.zip")
+    _write_zip(other, MEMBERS)
+    site = tmp_path / "site"
+    site.mkdir()
+    if installed is not None:
+        (site / "mrs_fakepkg").mkdir()
+        (site / "mrs_fakepkg" / "__init__.py").write_text("")
+        (site / "mrs_fakepkg" / "version.py").write_text(installed)
+    path = [archive, other, str(tmp_path / "missing"), str(site)]
+    monkeypatch.setattr(sys, "path", list(path))
+    boot.prefer_installed("mrs_fakepkg")
+    if moved:
+        assert sys.path == [other, str(tmp_path / "missing"), str(site), archive]
+    else:
+        assert sys.path == path
+
+
 def test_boot_hook_installs_reset_and_runs_shadowed_hook(tmp_path):
     """A bare interpreter with the boot directory on ``PYTHONPATH``
     installs the reset at start-up, still runs a ``sitecustomize``
@@ -125,6 +157,21 @@ def test_boot_hook_installs_reset_and_runs_shadowed_hook(tmp_path):
     assert got["loaded"] == []
 
 
+def _installed_matches_archives() -> bool:
+    """Whether the installed pyspark and py4j have the same
+    ``version.py`` as every archive of Spark's that holds them."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    archives = glob.glob(os.path.join(_find_spark_home(), "python", "lib", "*.zip"))
+    for package in ("pyspark", "py4j"):
+        origin = importlib.util.find_spec(package).origin
+        with open(os.path.join(os.path.dirname(origin), "version.py"), "rb") as f:
+            installed = f.read()
+        if any(boot._archive_version(a, package) not in (None, installed) for a in archives):
+            return False
+    return True
+
+
 _OUTSIDE_SCRIPT = textwrap.dedent(
     """
     import json, sys
@@ -136,8 +183,11 @@ _OUTSIDE_SCRIPT = textwrap.dedent(
     def state():
         # what this Python process had set up before any task code ran
         import gc, sys, zipimport
+        import py4j, pyspark
         hook = sys.modules.get("sitecustomize")
         return {
+            "pyspark": pyspark.__file__,
+            "py4j": py4j.__file__,
             "hook": getattr(hook, "__file__", None),
             "patched": zipimport.zipimporter.invalidate_caches
             is getattr(hook, "invalidate_caches", None),
@@ -225,3 +275,8 @@ def test_workers_fork_from_engine_daemon_outside_repo(tmp_path, sf_dir):
         assert state["pandas"] and state["frozen"] > 0
     for slug, (ok, problem) in got["oracle"].items():
         assert ok, (slug, problem)
+    if not _installed_matches_archives():
+        pytest.skip("the installed pyspark or py4j differs from Spark's archive")
+    # a module loaded from an archive has a __file__ inside the zip
+    for state in [*got["tasks"], got["planner"], got["reader"]]:
+        assert os.path.isfile(state["pyspark"]) and os.path.isfile(state["py4j"]), state

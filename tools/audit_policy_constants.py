@@ -2,11 +2,10 @@
 must reach its DuckDB oracle by NAME (f-string interpolation), never as
 a literal twin.
 
-Two rounds in a row, a scale-dependent policy constant lived in only
-one engine: round 6's fixed-bit LSH ladder, round 7's stale
-ndcg/recall oracles still pinned to the 6-bit hash after the Spark
-side moved to the occupancy-adaptive ladder. Both were identical at
-gate scale and divergent at sf1. The structural fix: if a query
+Twice, a scale-dependent policy constant lived in only one engine: a
+fixed-bit LSH ladder, and ndcg/recall oracles still pinned to the
+6-bit hash after the Spark side moved to the occupancy-adaptive
+ladder. Both were identical at gate scale and divergent at sf1. The structural fix: if a query
 function references a module-level ALL_CAPS numeric constant AND that
 constant's value appears as a standalone numeric token in the
 rendered oracle SQL, the oracle's SOURCE expression must reference

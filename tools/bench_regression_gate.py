@@ -1,4 +1,4 @@
-"""Driver-bench regression gate (r08 verdict ask #6): run before every
+"""Driver-bench regression gate: run before every
 freeze so the weak-list arrives pre-adjudicated instead of being
 discovered by the judge.
 
@@ -17,8 +17,7 @@ Usage (from /root/repo, after `python bench.py`):
 
 The gate's thresholds mirror the judge's weak-mark rule (>2x flagged,
 >3x with best >1 s marked weak); staying under 3x here keeps every
-driver-visible number inside the noise envelope the VERDICT already
-accepts.
+driver-visible number inside the accepted noise envelope.
 """
 
 from __future__ import annotations
@@ -29,8 +28,8 @@ import sys
 
 BEST_FLOOR_SEC = 1.0  # slugs faster than this are pure noise at host variance
 RATIO_LIMIT = 3.0
-# r09 verdict ask #1a: the BEST_FLOOR exemption alone let a 162x
-# outlier with a 0.34 s best stand unadjudicated. Any latest measure
+# The BEST_FLOOR exemption alone would let a 162x outlier with a
+# 0.34 s best stand unadjudicated. Any latest measure
 # exceeding max(RATIO_LIMIT x best, ABS_FLOOR_SEC) is now a violation
 # regardless of best-of magnitude.
 ABS_FLOOR_SEC = 5.0
@@ -78,7 +77,7 @@ def main() -> int:
 
     # An incomplete queries map (e.g. a partial --only run overwrote the
     # sidecar) would make a PASS meaningless: the gate must see the full
-    # suite it is adjudicating (r09 ADVICE).
+    # suite it is adjudicating.
     if len(latest) < 0.9 * len(best):
         print(
             f"REGRESSION GATE FAIL: sidecar holds only {len(latest)} latest"

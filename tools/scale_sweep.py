@@ -1,9 +1,9 @@
-"""Dual-scale sweep for the 100 TB-claim families (VERDICT r05 ask #2):
+"""Dual-scale sweep for the 100 TB-claim families:
 time each slug at the driver's sf0.1 AND a 10x generated sf1 dataset
 (tools/gen_scale_data.py), value-check Spark vs DuckDB at sf1, and
 print per-slug scaling exponents  e = log10(t_sf1 / t_sf0.1)  — e <= ~1
 means at-most-linear in data volume; anything super-linear is a bug the
-plan audit can't see (the round-3 sf0.1 sweep caught exactly such a
+plan audit can't see (an sf0.1 sweep once caught exactly such a
 constant).
 
 Usage: python tools/scale_sweep.py [sf1_dir] [slug ...]

@@ -258,8 +258,9 @@ def main() -> int:
         ),
         "best_of": {
             "method": "per-query min across all full-suite and partial runs "
-            "at this sf since round 3 (merge-then-write; a run can only "
-            "lower an entry, never drop one)",
+            "at this sf: each run is merged into the previous sidecar's map "
+            "before it is written, so a run can only lower an entry, never "
+            "drop one",
             "per_query_best_sum_sec": round(sum(best.values()), 1),
             "queries": best,
         },

@@ -1160,8 +1160,8 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Bit count is ADAPTIVE (``sign_bits_for``): bucket count scales
     with the corpus so expected occupancy stays ≤ SIGN_OCCUPANCY and
-    the within-bucket self-join stays LINEAR in corpus size — the
-    round-6 dual-scale sweep measured the fixed-4-bit form at scaling
+    the within-bucket self-join stays LINEAR in corpus size — an
+    sf0.1→sf1 sweep measured the fixed-4-bit form at scaling
     exponent 1.91 (quadratic); occupancy-targeted bits are the fix."""
     from mapreduce_rust_spark.functions.vectors import cosine_from_norms, l2_norm
     from mapreduce_rust_spark.operators.similarity import (

@@ -33,11 +33,6 @@ from mapreduce_rust_spark.sources.tables import fan_out, load_table
 
 ORACLE: dict[str, str] = {}
 
-MEDIA_SCHEMA = (
-    "media_id bigint, media_type string, payload binary, "
-    "src string, n_bytes bigint"
-)
-
 DECODED_SCHEMA = (
     "media_id bigint, media_type string, width int, height int, "
     "n_frames int, feature_norm double"

@@ -57,8 +57,8 @@ def _sign_bucket_sql(vec_expr: str, n_bits: int = N_SIGN_BITS) -> str:
 # --- adaptive sign-LSH: bucket count scales with corpus size --------
 #
 # A FIXED bit count makes every bucket's occupancy grow linearly with
-# the corpus, so any within-bucket join grows QUADRATICALLY — the
-# round-6 sf0.1→sf1 sweep measured exactly that (dedup_embedding_lsh
+# the corpus, so any within-bucket join grows QUADRATICALLY — an
+# sf0.1→sf1 sweep measured exactly that (dedup_embedding_lsh
 # exponent 1.91). The scale-correct policy is occupancy-targeted:
 #     B = clamp(ceil(log2(n / OCCUPANCY)), MIN_BITS, MAX_BITS)
 # which keeps expected bucket size ≤ OCCUPANCY, making bucketed
@@ -354,8 +354,8 @@ ANN_QUERY_CAP = 20_000  # query panel drawn from ids BELOW this only
 # "every 100th vector" made query count scale with the corpus, so
 # queries x probed-candidates turned the whole ANN family quadratic
 # (sf1->sf10 sweep measured exponent 1.42 on ann_topk_ivfpq before
-# this cap — the same defect class as the round-7 decontamination
-# benchmark fraction). ids ≡ 0 (mod 100) below 20k = 200 queries at
+# this cap — the same defect class as a decontamination benchmark
+# drawn as a corpus fraction). ids ≡ 0 (mod 100) below 20k = 200 queries at
 # sf1 and beyond; unchanged at the gate scales (corpus < cap there).
 _QUERY_PRED = f"vec_id % 100 = 0 AND vec_id < {ANN_QUERY_CAP}"
 
@@ -3127,8 +3127,8 @@ def _mmr_oracle_sql() -> str:
     MMR_LAMBDA weight) — round r's penalty is max candidate-candidate
     sim to the r-1 already-selected ids, exactly the Spark loop body.
     Generated, not hand-unrolled: a retune of MMR_K/MMR_LAMBDA cannot
-    leave a stale literal twin behind (the round-6/7 defect class the
-    policy-constant audit now guards)."""
+    leave a stale literal twin behind (the defect class the
+    policy-constant audit guards)."""
     rounds = []
     for r in range(2, MMR_K + 1):
         prev = list(range(1, r))

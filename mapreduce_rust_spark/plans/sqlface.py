@@ -412,7 +412,6 @@ def sql_scripting_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop is driver-coordinated like the components loop, with the
     scripting runtime handling the round-trips."""
     register_views(spark, sf_dir, "orders")
-    spark.sql("SET spark.sql.scripting.enabled=true")
     return spark.sql(
         """
         BEGIN

@@ -30,14 +30,17 @@ engine-level knobs we own are the session configs below, chosen for the
   compiled bytecode instead of compiling pyspark from the archive
   (``import pyspark.daemon``: 1.59 s from the zip, 0.48 s installed).
   Without a matching installed copy, ``sys.path`` stays as Spark built
-  it.
-* ``spark.python.daemon.module`` = ``mapreduce_rust_spark.pydaemon``:
-  UDF, Arrow/pandas UDF and datasource read and write tasks fork from a
-  daemon that has pyarrow, pandas and numpy loaded and GC-frozen, so
-  the workers share those pages and skip them in their per-task
-  ``gc.collect()``.
+  it. In the UDF daemon, which UDF, Arrow/pandas UDF and datasource
+  read and write tasks fork from, the hook also preloads pyarrow,
+  pandas and numpy and GC-freezes them, so the workers share those
+  pages and skip them in their per-task ``gc.collect()``.
 * A bare session (``MRS_PLAIN_SESSION=1`` in the correctness tools)
-  sets none of this: its workers get neither the hook nor the daemon.
+  sets none of this: its workers get neither the hook nor the preload.
+
+Engine code that needs a session conf for one step sets it through
+``pinned_conf``, never with a bare ``spark.conf.set``: a caller hands
+the engine its own session, and a conf left behind changes every
+later query in it.
 """
 
 from __future__ import annotations
@@ -46,10 +49,13 @@ import atexit
 import os
 import shutil
 import tempfile
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 _SCRATCH_ROOT: str | None = None
+_CONF_LOCK = threading.Lock()
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_BOOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "workerboot")
 
@@ -67,6 +73,25 @@ def scratch_dir(prefix: str = "mrs_") -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
+@contextmanager
+def pinned_conf(spark: SparkSession, key: str, value: str):
+    """Set session conf ``key`` to ``value`` for the ``with`` body, then
+    put back the parent's exact state: its value, or unset if it was
+    unset. One module lock covers the save, set, body and restore, so
+    threads pinning confs never see or restore each other's pins; the
+    lock is not re-entrant, so pins do not nest."""
+    with _CONF_LOCK:
+        # explicitly set only: get() would return an unset key's default
+        parent = spark.conf.get(key) if spark.conf._jconf.contains(key) else None
+        spark.conf.set(key, value)
+        try:
+            yield
+        finally:
+            spark.conf.unset(key)
+            if parent is not None:
+                spark.conf.set(key, parent)
+
+
 def get_spark(
     app_name: str = "mapreduce_rust_spark",
     master: str | None = None,
@@ -80,11 +105,10 @@ def get_spark(
     cluster the caller passes the cluster master and the same tuning
     applies.
     """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
 
     builder = (
@@ -104,10 +128,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.python.daemon.module", "mapreduce_rust_spark.pydaemon")
-        # the daemon (and any engine function a worker unpickles) must
-        # import from wherever the driver was started; workerboot's
-        # sitecustomize runs in every Python process Spark starts
+        # any engine function a worker unpickles must import from
+        # wherever the driver was started; workerboot's sitecustomize
+        # runs in every Python process Spark starts
         .config("spark.executorEnv.PYTHONPATH", os.pathsep.join((_PACKAGE_ROOT, _WORKER_BOOT)))
     )
     if extra_conf:

@@ -31,6 +31,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_rust_spark.session import pinned_conf
+
 ORACLE: dict[str, str] = {}
 
 N_ROWS = 4096
@@ -210,15 +212,22 @@ def source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan cost tracks the selected range, not the table. ``scan_lo``
     (min'd per group) certifies the absorbed bound end-to-end; see
     ``_PushdownReader`` for why a silent pushdown regression cannot
-    pass the oracle."""
+    pass the oracle.
+
+    Python-source pushdown is off by default. It is on only while the
+    returned frame's plan is optimized, which is where the filters are
+    pushed; the frame keeps that plan for every action on it, and the
+    session keeps the caller's setting."""
     _register_source(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    df = (
-        spark.read.format("mrs_range_pushdown")
-        .load()
-        .filter(F.col("id") >= PUSHDOWN_THRESH)
-    )
-    return _bucket_totals(df, F.min("scan_lo").alias("scan_lo")).orderBy("bucket")
+    with pinned_conf(spark, "spark.sql.python.filterPushdown.enabled", "true"):
+        df = (
+            spark.read.format("mrs_range_pushdown")
+            .load()
+            .filter(F.col("id") >= PUSHDOWN_THRESH)
+        )
+        out = _bucket_totals(df, F.min("scan_lo").alias("scan_lo")).orderBy("bucket")
+        out._jdf.queryExecution().optimizedPlan()
+    return out
 
 
 source_python_pushdown.__doc__ = source_python_pushdown.__doc__.format(

@@ -30,13 +30,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor — at
-# TPC-H geometry region/nation are constant-size and supplier/customer/
-# part grow far slower than the fact tables. Joins against these should
-# never shuffle the fact side.
-BROADCAST_SAFE = ("region", "nation", "supplier")
-
-
 # (session id, sf_dir, table, file stamp) → (raw, normalized) analyzed
 # DataFrames: the raw read's schema (before ``normalize_ts``) is what
 # ``streaming.queries.read_stream_table`` streams with. A

@@ -25,7 +25,6 @@ high-cardinality, even spread across executors.
 from __future__ import annotations
 
 import os
-import threading
 import time
 from itertools import count
 
@@ -35,13 +34,11 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from mapreduce_rust_spark.functions.numeric import fround, fround_sql
 from mapreduce_rust_spark.functions.text import tokenize_whitespace
-from mapreduce_rust_spark.session import scratch_dir
+from mapreduce_rust_spark.session import pinned_conf, scratch_dir
 
 ORACLE: dict[str, str] = {}
 
 _run_ids = count()
-_START_LOCK = threading.Lock()
-_PARTITIONS = "spark.sql.shuffle.partitions"
 _DRAIN_TIMEOUT_S = 120.0
 
 
@@ -90,8 +87,8 @@ def run_stream(
     count BEFORE first checkpoint (it is frozen thereafter).
 
     The pin lasts only for ``start()`` (see ``run_available_now``);
-    a module lock makes the set/start/restore atomic across threads
-    starting streams.
+    ``pinned_conf``'s lock makes the set/start/restore atomic across
+    threads starting streams.
 
     ``until_rows=None`` runs ``trigger(availableNow=True)`` to
     completion. Sources that cannot drain under ``availableNow``
@@ -110,13 +107,8 @@ def run_stream(
         writer = writer.trigger(availableNow=True)
     else:
         writer = writer.trigger(processingTime="0 seconds")
-    with _START_LOCK:
-        parent = spark.conf.get(_PARTITIONS)
-        spark.conf.set(_PARTITIONS, target)
-        try:
-            query = writer.start()
-        finally:
-            spark.conf.set(_PARTITIONS, parent)
+    with pinned_conf(spark, "spark.sql.shuffle.partitions", target):
+        query = writer.start()
     if until_rows is None:
         query.awaitTermination()
         return

@@ -3,11 +3,12 @@
 ``get_spark`` puts this directory on ``spark.executorEnv.PYTHONPATH``,
 so ``site`` imports this file as ``sitecustomize`` when any Python
 worker or daemon starts. That covers the UDF daemon and the Python
-datasource planner and writer runners, which Spark 4.1 always starts as
-``python -m pyspark.daemon`` whatever ``spark.python.daemon.module``
-says. The file uses the standard library only and imports nothing from
-the engine or pyspark, so a process that needs neither pays nothing for
-them.
+datasource planner and writer runners, all of which Spark 4.1 starts as
+``python -m pyspark.daemon <worker module>``. Only the UDF daemon
+imports more than the standard library here (see the end of this
+docstring); every other process, planners included, imports nothing
+from the engine or pyspark, so a process that needs neither pays
+nothing for them.
 
 Each worker task starts with ``importlib.invalidate_caches()``
 (``pyspark.worker_util.setup_spark_files``). Before Python 3.12,
@@ -38,10 +39,26 @@ exactly as Spark built it.
 
 This file shadows any ``sitecustomize`` further along ``sys.path``, so
 it runs that one too.
+
+Last, in the UDF daemon (``-m pyspark.daemon`` with worker module
+``pyspark.worker``, which Spark also runs when none is given), the hook
+imports numpy, pandas, pyarrow and ``pyspark.worker`` and then
+``gc.freeze()``s the heap. UDF, Arrow/pandas UDF,
+``applyInPandasWithState`` and Python datasource read and write tasks
+fork from that daemon, so they share those pages instead of each
+importing its own copy, and the ``gc.collect()`` ``pyspark.daemon`` runs
+between a reused worker's tasks no longer walks them: 17-22 ms a task
+with pandas loaded, under 0.1 ms once frozen (same host). On the
+``stream_write`` benchmark this cut the Python processes' peak PSS from
+492 to 393 MB (median of 8 runs). The preload runs after the path and
+reset changes above, so it imports compiled bytecode. The planner
+daemons are left alone: none of their worker modules imports pandas,
+and importing numpy, pandas and pyarrow costs 0.69 s.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import zipimport
@@ -132,8 +149,22 @@ def _run_shadowed() -> None:
         spec.loader.exec_module(module_from_spec(spec))
 
 
+def is_udf_daemon(argv: list[str]) -> bool:
+    """Whether ``argv`` (``sys.orig_argv``) starts the daemon Spark forks
+    UDF and datasource read and write tasks from."""
+    return argv[1:3] == ["-m", "pyspark.daemon"] and argv[3:4] in ([], ["pyspark.worker"])
+
+
 if __name__ == "sitecustomize":
     for _package in ("pyspark", "py4j"):
         prefer_installed(_package)
     _install()
     _run_shadowed()
+    # orig_argv is new in 3.10; without it nothing is preloaded
+    if is_udf_daemon(getattr(sys, "orig_argv", [])):
+        import numpy  # noqa: F401
+        import pandas  # noqa: F401
+        import pyarrow  # noqa: F401
+        import pyspark.worker  # noqa: F401
+
+        gc.freeze()

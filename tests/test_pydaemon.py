@@ -1,7 +1,8 @@
-"""The Python processes Spark starts for an engine session: the
-import-cache reset every one of them installs at start-up
-(``workerboot/sitecustomize.py``), and the preloaded UDF daemon
-(``mapreduce_rust_spark.pydaemon``)."""
+"""The Python processes Spark starts for an engine session and their
+one boot hook (``workerboot/sitecustomize.py``): the import-cache reset
+and compiled-pyspark path every one of them installs at start-up, and
+the preload and GC freeze only the UDF daemon (stock
+``pyspark.daemon``) gets."""
 
 from __future__ import annotations
 
@@ -157,6 +158,21 @@ def test_boot_hook_installs_reset_and_runs_shadowed_hook(tmp_path):
     assert got["loaded"] == []
 
 
+@pytest.mark.parametrize(
+    "args, preload",
+    [
+        (["-m", "pyspark.daemon", "pyspark.worker"], True),
+        (["-m", "pyspark.daemon"], True),
+        (["-m", "pyspark.daemon", "pyspark.sql.worker.plan_data_source_read"], False),
+        (["-m", "pyspark.worker"], False),
+        (["-c", "import pyspark.daemon", "pyspark.worker"], False),
+    ],
+    ids=["udf-daemon", "udf-daemon-default-module", "planner-daemon", "other-module", "code"],
+)
+def test_only_the_udf_daemon_preloads(args, preload):
+    assert boot.is_udf_daemon([sys.executable, *args]) is preload
+
+
 def _installed_matches_archives() -> bool:
     """Whether the installed pyspark and py4j have the same
     ``version.py`` as every archive of Spark's that holds them."""
@@ -232,7 +248,7 @@ _OUTSIDE_SCRIPT = textwrap.dedent(
         for slug in ("source_python_datasource", "sink_python_datasource")
     }
     print("RESULT " + json.dumps({
-        "conf": spark.sparkContext.getConf().get("spark.python.daemon.module"),
+        "conf": spark.sparkContext.getConf().get("spark.python.daemon.module", None),
         "tasks": [json.loads(r.state) for r in tasks],
         "planner": json.loads(planned.planner),
         "reader": json.loads(planned.reader),
@@ -246,10 +262,11 @@ _OUTSIDE_SCRIPT = textwrap.dedent(
 def test_workers_fork_from_engine_daemon_outside_repo(tmp_path, sf_dir):
     """Started from a directory outside the checkout, with the checkout
     only on the driver's own ``sys.path``: every Python process,
-    including the datasource planner Spark starts as stock
-    ``pyspark.daemon``, runs the checkout's boot hook; every task runs
-    in a worker forked from the preloaded engine daemon; and the Python
-    datasource reader and writer slugs still match their oracles."""
+    including the datasource planner, runs the checkout's boot hook;
+    every task runs in a worker forked from stock ``pyspark.daemon``
+    with pandas preloaded and the heap frozen, while the planner gets
+    neither; and the Python datasource reader and writer slugs still
+    match their oracles."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
     script = f"ROOT = {ROOT!r}\nSF_DIR = {sf_dir!r}\n" + _OUTSIDE_SCRIPT
@@ -264,15 +281,16 @@ def test_workers_fork_from_engine_daemon_outside_repo(tmp_path, sf_dir):
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
     assert proc.returncode == 0 and lines, proc.stderr[-3000:]
     got = json.loads(lines[-1][len("RESULT "):])
-    assert got["conf"] == "mapreduce_rust_spark.pydaemon"
+    assert got["conf"] is None
     assert len(got["tasks"]) == 2
     hook = os.path.join(BOOT_DIR, "sitecustomize.py")
     for state in [*got["tasks"], got["planner"], got["reader"]]:
         assert state["hook"] == hook
         assert state["patched"] or sys.version_info >= (3, 12)
+        assert state["daemon"] == "pyspark.daemon"
     for state in [*got["tasks"], got["reader"]]:
-        assert state["daemon"] == "mapreduce_rust_spark.pydaemon"
         assert state["pandas"] and state["frozen"] > 0
+    assert not got["planner"]["pandas"] and got["planner"]["frozen"] == 0
     for slug, (ok, problem) in got["oracle"].items():
         assert ok, (slug, problem)
     if not _installed_matches_archives():

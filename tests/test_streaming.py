@@ -263,20 +263,55 @@ def test_pushdown_source_fallback_for_unsupported_filters(spark):
         PUSHDOWN_THRESH,
         _register_source,
     )
+    from mapreduce_rust_spark.session import pinned_conf
 
     _register_source(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    df = (
-        spark.read.format("mrs_range_pushdown")
-        .load()
-        .filter(
-            (F.col("id") >= PUSHDOWN_THRESH) & (F.pmod(F.col("id"), F.lit(2)) == 0)
+    with pinned_conf(spark, "spark.sql.python.filterPushdown.enabled", "true"):
+        df = (
+            spark.read.format("mrs_range_pushdown")
+            .load()
+            .filter(
+                (F.col("id") >= PUSHDOWN_THRESH) & (F.pmod(F.col("id"), F.lit(2)) == 0)
+            )
         )
-    )
-    rows = df.select("id", "scan_lo").collect()
+        rows = df.select("id", "scan_lo").collect()
     ids = sorted(r["id"] for r in rows)
     assert ids == [i for i in range(PUSHDOWN_THRESH, N_ROWS) if i % 2 == 0]
     assert {r["scan_lo"] for r in rows} == {PUSHDOWN_THRESH}
+
+
+@pytest.mark.parametrize("parent", [None, "false"], ids=["unset", "false"])
+def test_pushdown_slug_leaves_session_conf_as_found(spark, sf_dir, parent):
+    """``source_python_pushdown`` turns Python-source pushdown on only
+    while its frame's plan is optimized: afterwards the session holds
+    the caller's setting, unset included, and the frame still runs
+    with the pushdown and matches its oracle."""
+    import duckdb
+
+    from mapreduce_rust_spark.sources.pysource import (
+        ORACLE,
+        PUSHDOWN_THRESH,
+        source_python_pushdown,
+    )
+
+    key = "spark.sql.python.filterPushdown.enabled"
+    outer = spark.conf.getAll.get(key)
+    try:
+        if parent is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, parent)
+        df = source_python_pushdown(spark, sf_dir)
+        assert spark.conf.getAll.get(key) == parent
+        got = [tuple(int(v) for v in r) for r in df.toPandas().itertuples(index=False)]
+        want = duckdb.sql(ORACLE["source_python_pushdown"]).fetchall()
+        assert got == [tuple(int(v) for v in r) for r in want]
+        assert {r["scan_lo"] for r in df.collect()} == {PUSHDOWN_THRESH}
+    finally:
+        if outer is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, outer)
 
 
 def _offset_log_conf(ckpt: str) -> dict:
